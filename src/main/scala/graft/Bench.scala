@@ -47,7 +47,7 @@ object Bench {
     // numbers use the defaults above).
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
+        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
         case _ => ()
       }
     })

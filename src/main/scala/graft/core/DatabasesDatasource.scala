@@ -44,20 +44,15 @@ final class DatabasesDatasource extends GenericDatasource(DatasourceSpec(
     * staging partition (:3792-3794). A tick with no staged scan is a
     * no-op — same as every other datasource's empty-staging tick. */
   override def snapshot(store: Store, srvid: Int,
-      now: java.sql.Timestamp): Long = {
-    val staged = store.read(name, Staging, srcSchema)
-      .filter(col("srvid") === srvid)
-      .select(col("oid"), col("datname"))
-    val n = if (store.traceRowcounts) staged.count() else -1L
-    if (n != 0) {
-      val synced = DiffSync.sync(readDim(store, srvid), staged,
+      now: java.sql.Timestamp): Long =
+    withStaged(store, srvid, srcSchema) { staged =>
+      val synced = DiffSync.sync(readDim(store, srvid),
+        staged.select(col("oid"), col("datname")),
         Seq("oid"), "datname", "dropped", lit(now))
       store.overwritePartition(name, Dim, srvid,
         synced.withColumn("srvid", lit(srvid)))
       store.dropPartition(name, Staging, srvid)
     }
-    n
-  }
 
   /** Dimension-only: nothing to coalesce. */
   override def aggregate(store: Store, srvid: Int): Unit = ()

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.{Coalesce, Readback}
 import graft.spec.{DatasourceSpec, Specs}
 
@@ -38,21 +39,31 @@ class GenericDatasource(val spec: DatasourceSpec) {
   def snapshot(store: Store, srvid: Int,
       now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())): Long = {
     recoverPending(store, srvid)
-    val staged = store.read(name, Staging, spec.stagingSchema)
+    // sink appends + staging drain commit ATOMICALLY — the crash
+    // window between them would double-append on retry (Store's
+    // snapshot commit protocol; reference :4102-4104 drains inside
+    // the same transaction)
+    withStaged(store, srvid, spec.stagingSchema)(staged =>
+      store.snapshotCommit(name, Staging, srvid, snapshotSinks(staged)))
+  }
+
+  /** Run `commit` over this server's staged rows; returns their count
+    * (−1 when tracing is off). ONE cached partition: the frame holds one
+    * server's samples since its last tick (the property
+    * `Store.tickCodegenScope` also rests on), so each sink tier is one
+    * task writing one file per tick, however many files the collector
+    * landed. Cached: the sinks are several outputs of one scan (SURVEY.md
+    * §7.4 item 6). A staging partition implies staged rows (ingest writes
+    * none for an empty frame), so the count is trace-only, not a gate. */
+  protected def withStaged(store: Store, srvid: Int, schema: StructType)(
+      commit: DataFrame => Unit): Long = {
+    val staged = store.read(name, Staging, schema)
       .filter(col("srvid") === srvid)
-      .cache() // two outputs from one scan (SURVEY.md §7.4 item 6)
+      .coalesce(1)
+      .cache()
     try {
-      // an existing staging partition implies staged rows (ingest writes
-      // no partition dir for an empty frame), so the row count is a
-      // trace-only action, not a gate
       val n = if (store.traceRowcounts) staged.count() else -1L
-      if (n != 0) {
-        // sink appends + staging drain commit ATOMICALLY — the crash
-        // window between them would double-append on retry (Store's
-        // snapshot commit protocol; reference :4102-4104 drains inside
-        // the same transaction)
-        store.snapshotCommit(name, Staging, srvid, snapshotSinks(staged))
-      }
+      if (n != 0) commit(staged)
       n
     } finally staged.unpersist()
   }
@@ -114,7 +125,7 @@ class GenericDatasource(val spec: DatasourceSpec) {
     val staged = store.read(name, Staging, spec.stagingSchema)
       .filter(col("srvid").isin(srvids.map(Int.box): _*))
       .coalesce(parallelism)
-      .cache() // sinks + trace count from one scan, like snapshot()
+      .cache() // sinks + trace count from one scan, like withStaged
     try {
       val counts: Map[Int, Long] =
         if (store.traceRowcounts)

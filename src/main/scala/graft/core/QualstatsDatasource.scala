@@ -53,46 +53,40 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
   override def snapshot(store: Store, srvid: Int,
       now: java.sql.Timestamp): Long = {
     recoverPending(store, srvid)
-    val staged = store.read(name, Staging, stagingFull)
-      .filter(col("srvid") === srvid).cache()
-    try {
-      val n = if (store.traceRowcounts) staged.count() else -1L
-      if (n != 0) {
-        val idKeys = Seq("qualid", "queryid", "dbid", "userid")
-        // missing quals → dimension insert (:7126-7143). Unlike the
-        // statements dim there is no MRU touch here, so a tick that
-        // brings no new qual shapes (the steady state — dims stabilize
-        // fast) skips the dimension rewrite entirely.
-        val dim = readDim(store, srvid)
-        val missing = staged.select(
-            col("qualid"), col("queryid"), col("dbid"), col("userid"),
-            col("quals"))
-          .join(dim, idKeys, "left_anti")
-          .dropDuplicates(idKeys)
+    withStaged(store, srvid, stagingFull) { staged =>
+      val idKeys = Seq("qualid", "queryid", "dbid", "userid")
+      // missing quals → dimension insert (:7126-7143). Unlike the
+      // statements dim there is no MRU touch here, so a tick that
+      // brings no new qual shapes (the steady state — dims stabilize
+      // fast) skips the dimension rewrite entirely.
+      val dim = readDim(store, srvid)
+      val missing = staged.select(
+          col("qualid"), col("queryid"), col("dbid"), col("userid"),
+          col("quals"))
+        .join(dim, idKeys, "left_anti")
+        .dropDuplicates(idKeys)
 
-        // per-qual metric records + constvalues rows land atomically
-        // with the staging drain (Store snapshot commit protocol); the
-        // dim insert rides `alongside` — outside the marker, re-derived
-        // on retry, complete before the drain — so its isEmpty probe
-        // and (rare) rewrite overlap the sink stage writes instead of
-        // serializing ahead of them
-        store.snapshotCommit(name, Staging, srvid, Seq(
-          Current -> staged.select(
-            col("srvid") +: spec.keyNames.map(col) :+
-              struct(col("ts") +: spec.counterCols.map(c => col(c.name)): _*)
-                .as("record"): _*),
-          Constvalues -> staged.select(
-            col("srvid"), col("qualid"), col("queryid"), col("dbid"),
-            col("userid"), col("ts"), col("constvalues"),
-            col("occurences"), col("execution_count"), col("nbfiltered"),
-            col("mean_err_estimate_ratio"), col("mean_err_estimate_num"))),
-          alongside = Seq(() =>
-            if (!missing.isEmpty)
-              store.overwritePartition(name, Dim, srvid,
-                dim.unionByName(missing).withColumn("srvid", lit(srvid)))))
-      }
-      n
-    } finally staged.unpersist()
+      // per-qual metric records + constvalues rows land atomically
+      // with the staging drain (Store snapshot commit protocol); the
+      // dim insert rides `alongside` — outside the marker, re-derived
+      // on retry, complete before the drain — so its isEmpty probe
+      // and (rare) rewrite overlap the sink stage writes instead of
+      // serializing ahead of them
+      store.snapshotCommit(name, Staging, srvid, Seq(
+        Current -> staged.select(
+          col("srvid") +: spec.keyNames.map(col) :+
+            struct(col("ts") +: spec.counterCols.map(c => col(c.name)): _*)
+              .as("record"): _*),
+        Constvalues -> staged.select(
+          col("srvid"), col("qualid"), col("queryid"), col("dbid"),
+          col("userid"), col("ts"), col("constvalues"),
+          col("occurences"), col("execution_count"), col("nbfiltered"),
+          col("mean_err_estimate_ratio"), col("mean_err_estimate_num"))),
+        alongside = Seq(() =>
+          if (store.probe(name, Dim, srvid)(!missing.isEmpty))
+            store.overwritePartition(name, Dim, srvid,
+              dim.unionByName(missing).withColumn("srvid", lit(srvid)))))
+    }
   }
 
   /** The constvalues tier schema (powa_qualstats_constvalues_history_

@@ -31,26 +31,20 @@ final class StatementsDatasource extends GenericDatasource(Specs.statements) {
   override def snapshot(store: Store, srvid: Int,
       now: java.sql.Timestamp): Long = {
     recoverPending(store, srvid)
-    val staged = store.read(name, Staging, stagingWithQuery)
-      .filter(col("srvid") === srvid).cache()
-    try {
-      val n = if (store.traceRowcounts) staged.count() else -1L
-      if (n != 0) {
-        val (newDim, sinks) = StatementsPipeline.snapshot(
-          readDim(store, srvid), staged, srvid, lit(now))
-        // dim overwrite stays OUTSIDE the commit marker (Store's
-        // snapshot-commit scaladoc: re-derived on a rolled-back retry,
-        // reference-equivalent); it must complete BEFORE the drain —
-        // its plan reads the staging partition — which `alongside`
-        // guarantees (every unit joins before the marker), while
-        // letting its planning overlap the sink stage writes
-        store.snapshotCommit(name, Staging, srvid, sinks,
-          alongside = Seq(() =>
-            store.overwritePartition(name, Dim, srvid,
-              newDim.withColumn("srvid", lit(srvid)))))
-      }
-      n
-    } finally staged.unpersist()
+    withStaged(store, srvid, stagingWithQuery) { staged =>
+      val (newDim, sinks) = StatementsPipeline.snapshot(
+        readDim(store, srvid), staged, srvid, lit(now))
+      // dim overwrite stays OUTSIDE the commit marker (Store's
+      // snapshot-commit scaladoc: re-derived on a rolled-back retry,
+      // reference-equivalent); it must complete BEFORE the drain —
+      // its plan reads the staging partition — which `alongside`
+      // guarantees (every unit joins before the marker), while
+      // letting its planning overlap the sink stage writes
+      store.snapshotCommit(name, Staging, srvid, sinks,
+        alongside = Seq(() =>
+          store.overwritePartition(name, Dim, srvid,
+            newDim.withColumn("srvid", lit(srvid)))))
+    }
   }
 
   /** `powa_statements_purge` (powa--5.2.0.sql:5850-5905): the generic

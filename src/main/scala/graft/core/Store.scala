@@ -60,6 +60,12 @@ final class Store(val spark: SparkSession, val root: String) {
     finally sc.setLocalProperty("spark.job.description", prev)
   }
 
+  /** Label a caller's read action on one server's tier partition (the
+    * check deciding whether a dimension is rewritten) `store: probe`, so
+    * every job a tick launches is attributed to a store op. */
+  def probe[T](ds: String, tier: String, srvid: Int)(body: => T): T =
+    labeled(s"store: probe $ds/$tier srvid=$srvid")(body)
+
   /** Whole-stage codegen scope for the PER-TICK write paths (ingest
     * append + snapshot sinks + dim rewrites). Measured (guide §1):
     * every tick's plans embed that tick's timestamp/batch literals, so
@@ -480,7 +486,10 @@ final class Store(val spark: SparkSession, val root: String) {
     * files into `targetFiles` files with one atomic swap — the
     * maintenance op for append-heavy current tiers, where every tick's
     * snapshotCommit lands one `.batch_` dir and up to `coalesce_seq`
-    * (~100) of them pile up before the aggregate drains the tier. At
+    * (~100) of them pile up before the aggregate drains the tier. A
+    * per-server tick writes ONE file per (server, tier) — its staged rows
+    * are one partition (GenericDatasource.withStaged) — so the drift is
+    * one file per tick, not one per collector ingest file. At
     * fleet scale that is the classic small-file problem (100 servers ×
     * 100 batches × several tiers), and the cluster form of this op is
     * Delta OPTIMIZE / Iceberg rewrite_data_files — invoked on a

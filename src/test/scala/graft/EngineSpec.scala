@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -116,6 +117,88 @@ class EngineSpec extends AnyFunSuite {
     assert(a.count() === 3L)
     assert(a.except(b).isEmpty && b.except(a).isEmpty,
       "multi-batch drain must preserve every record the per-batch ticks produce")
+  }
+
+  test("a tick writes one file per (server, sink tier), however many " +
+      "files the collector's batch landed in staging") {
+    import spark.implicits._
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(
+      id = 20, hostname = "h", powaCoalesce = 50, retentionSec = 3650L * 86400))
+    val ts = Timestamp.valueOf("2024-01-01 00:01:00")
+    val n = 8
+    val bgwriter = (1 to n).map(i => bgwriterBatch(srvid, i)).reduce(_.union(_))
+    val statements = (1 to n).map(i =>
+        (srvid, ts, i.toLong, (i % 2).toLong + 1L, true, 10L, 3L * i))
+      .toDF("srvid", "ts", "queryid", "dbid", "toplevel", "userid", "calls")
+      .select(col("*") +: Specs.statements.counterCols
+        .filterNot(_.name == "calls")
+        .map(c => lit(null).cast(c.dt).as(c.name)): _*)
+      .withColumn("query", concat(lit("SELECT "), col("queryid")))
+    val qualstats = (1 to n).map(i =>
+        (srvid, ts, 70L + i, 1L, 100L, 10L, 2L * i, 9L, 1L, 0.5, 1.0))
+      .toDF("srvid", "ts", "qualid", "queryid", "dbid", "userid",
+        "occurences", "execution_count", "nbfiltered",
+        "mean_err_estimate_ratio", "mean_err_estimate_num")
+      .withColumn("quals", array(struct(lit(200L).as("relid"),
+        lit(1).as("attnum"), lit(96L).as("opno"), lit("f").as("eval_type"))))
+      .withColumn("constvalues", array(lit("a")))
+    val batches = Seq("powa_stat_bgwriter" -> bgwriter,
+      "powa_statements" -> statements, "powa_qualstats" -> qualstats)
+
+    def parquetFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally s.close()
+    }
+    def partDir(ds: String, tier: String) =
+      java.nio.file.Paths.get(e.store.root, ds, tier, s"srvid=$srvid")
+    batches.foreach { case (ds, df) =>
+      e.ingest(ds, df.repartition(4))
+      assert(parquetFiles(partDir(ds, GenericDatasource.Staging)).size === 4,
+        s"$ds: the collector batch must land as 4 staging files")
+    }
+    assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:01:30")) === 0)
+
+    val qd = e.datasource("powa_qualstats").asInstanceOf[QualstatsDatasource]
+    val sinks = Seq(
+      "powa_stat_bgwriter" -> GenericDatasource.Current,
+      "powa_statements" -> GenericDatasource.Current,
+      "powa_statements" -> GenericDatasource.CurrentDb,
+      "powa_qualstats" -> GenericDatasource.Current,
+      "powa_qualstats" -> qd.Constvalues)
+    sinks.foreach { case (ds, tier) =>
+      val s = java.nio.file.Files.list(partDir(ds, tier))
+      val batchDirs =
+        try s.iterator().asScala
+          .filter(_.getFileName.toString.startsWith(".batch_")).toList
+        finally s.close()
+      assert(batchDirs.size === 1, s"$ds/$tier: one batch per tick")
+      assert(parquetFiles(batchDirs.head).size === 1,
+        s"$ds/$tier: one file per (server, tier) per tick")
+    }
+
+    // rows and counters read back exactly as staged
+    def current(ds: String) = e.store.readPartition(ds,
+      GenericDatasource.Current, srvid,
+      GenericDatasource.currentNoSrvid(Specs.byName(ds)))
+    def countAndSum(df: DataFrame, counter: String): (Long, Long) = {
+      val r = df.agg(count(lit(1)), sum(col(counter))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    assert(countAndSum(current("powa_stat_bgwriter"), "record.buffers_clean") ===
+      ((n.toLong, 100L * (1 to n).sum)))
+    assert(countAndSum(current("powa_statements"), "record.calls") ===
+      ((n.toLong, 3L * (1 to n).sum)))
+    assert(countAndSum(current("powa_qualstats"), "record.occurences") ===
+      ((n.toLong, 2L * (1 to n).sum)))
+    val cv = e.store.readPartition("powa_qualstats", qd.Constvalues, srvid,
+      qd.constvaluesSchema)
+    assert(countAndSum(cv, "occurences") === ((n.toLong, 2L * (1 to n).sum)))
+    val perDb = e.store.readPartition("powa_statements",
+      GenericDatasource.CurrentDb, srvid, GenericDatasource.currentNoSrvid(
+        e.datasource("powa_statements").dbSpec.get))
+    assert(countAndSum(perDb, "record.calls") === ((2L, 3L * (1 to n).sum)))
   }
 
   test("de-phased 3-tick cadence (the q34/q36 shape) leaves a real current/history mix") {

@@ -20,6 +20,8 @@ class StreamProviderSpec extends AnyFunSuite {
     "spark.sql.streaming.stateStore.providerClass"
   private val RocksDbClass =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val HdfsClass =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
   private val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
@@ -45,15 +47,17 @@ class StreamProviderSpec extends AnyFunSuite {
     }
     // knob set: pinned inside, restored outside. getOption on a SQL
     // conf WITH a built-in default returns Some(default), so "restored"
-    // is value-equality with the pre-scope reading, not emptiness.
+    // is value-equality with the pre-scope reading, not emptiness. The
+    // pre-scope provider is pinned, so the check does not depend on
+    // whatever the shared session's default happens to be.
     withConf(StreamTuning.ProviderKey, Some("rocksdb")) {
-      val preScope = spark.conf.get(ProviderClassConf)
-      assert(preScope !== RocksDbClass) // session default is HDFS-backed
-      StreamTuning.scoped(spark) {
-        assert(spark.conf.get(ProviderClassConf) === RocksDbClass)
-        assert(spark.conf.get(ChangelogConf) === "true")
+      withConf(ProviderClassConf, Some(HdfsClass)) {
+        StreamTuning.scoped(spark) {
+          assert(spark.conf.get(ProviderClassConf) === RocksDbClass)
+          assert(spark.conf.get(ChangelogConf) === "true")
+        }
+        assert(spark.conf.get(ProviderClassConf) === HdfsClass)
       }
-      assert(spark.conf.get(ProviderClassConf) === preScope)
     }
   }
 
