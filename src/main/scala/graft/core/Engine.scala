@@ -1,5 +1,8 @@
 package graft.core
 
+import java.nio.channels.{FileChannel, OverlappingFileLockException}
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.locks.ReentrantLock
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -370,33 +373,49 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     * single-mutator assumption across processes (round-2 VERDICT
     * item 2). */
   private val snapshotLocks =
-    new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.locks.ReentrantLock]()
+    new java.util.concurrent.ConcurrentHashMap[Int, ReentrantLock]()
+
+  /** One held per-server snapshot lock: the in-process mutex and the
+    * channel that holds the cross-process file lock until it closes. */
+  private case class HeldLock(srvid: Int, mutex: ReentrantLock,
+      ch: FileChannel)
+
+  /** Try-acquire one server's snapshot lock, NOWAIT — the one lock
+    * path of both tick forms: None when a concurrent snapshot holds
+    * it. Unless it returns the lock, it releases whatever it took, also
+    * when it throws — a leaked mutex or file lock would fail every
+    * later tick of the server in this JVM. */
+  private def tryAcquireLock(srvid: Int): Option[HeldLock] = {
+    val mutex = snapshotLocks.computeIfAbsent(srvid, _ => new ReentrantLock())
+    if (!mutex.tryLock()) return None
+    var held: Option[HeldLock] = None
+    try {
+      val lockDir = Paths.get(storageRoot, "_locks")
+      Files.createDirectories(lockDir)
+      val ch = FileChannel.open(lockDir.resolve(s"srvid=$srvid.lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try {
+        val fl = try ch.tryLock()
+          catch { case _: OverlappingFileLockException => null }
+        if (fl != null) held = Some(HeldLock(srvid, mutex, ch))
+      } finally if (held.isEmpty) ch.close()
+      held
+    } finally if (held.isEmpty) mutex.unlock()
+  }
+
+  /** Closing the channel releases its file lock. */
+  private def releaseLock(h: HeldLock): Unit =
+    try h.ch.close() finally h.mutex.unlock()
 
   /** One tick. Returns the number of errors (like powa_take_snapshot). */
   def takeSnapshot(srvid: Int,
       now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())): Int = {
     val server = registry.server(srvid)
     if (server.frequencySec == -1) return 0
-    def fail() = throw new IllegalStateException(
-      s"a concurrent snapshot is already running for server $srvid")
-    val lock = snapshotLocks.computeIfAbsent(srvid,
-      _ => new java.util.concurrent.locks.ReentrantLock())
-    if (!lock.tryLock()) fail()
-    try {
-      val lockDir = java.nio.file.Paths.get(storageRoot, "_locks")
-      java.nio.file.Files.createDirectories(lockDir)
-      val ch = java.nio.channels.FileChannel.open(
-        lockDir.resolve(s"srvid=$srvid.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      val fileLock =
-        try ch.tryLock()
-        catch { case _: java.nio.channels.OverlappingFileLockException =>
-          ch.close(); fail() }
-      if (fileLock == null) { ch.close(); fail() }
-      try takeSnapshotLocked(srvid, now, server)
-      finally { fileLock.release(); ch.close() }
-    } finally lock.unlock()
+    val held = tryAcquireLock(srvid).getOrElse(throw new IllegalStateException(
+      s"a concurrent snapshot is already running for server $srvid"))
+    try takeSnapshotLocked(srvid, now, server)
+    finally releaseLock(held)
   }
 
   /** Priority classes of `ds`, ascending — the walk order both tick
@@ -406,32 +425,24 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
       ds: Seq[GenericDatasource]): Seq[Seq[GenericDatasource]] =
     ds.groupBy(_.priority).toSeq.sortBy(_._1).map(_._2)
 
-  /** Apply `f` to every member of one priority class and return the
-    * results IN INPUT ORDER. Members run concurrently on a bounded
-    * pool when there is more than one AND no trace sink is installed
-    * (`Store.traceRowcounts` — the trace contract is a sequential log
-    * and user sinks need not be thread-safe); otherwise sequentially,
-    * which is byte-identical to the historical path. `f` must be
-    * error-isolated (snapshot workers catch and RETURN their errors);
-    * anything escaping it is fatal and is rethrown unwrapped so the
-    * caller sees the same throwable the sequential path would. */
-  private def runOrdered[T](group: Seq[GenericDatasource],
-      f: GenericDatasource => T): Seq[T] =
-    if (group.sizeIs <= 1 || store.traceRowcounts) group.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(group.size, 4))
-      try group.map { d =>
-        pool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = f(d)
-        })
-      }.map { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-      finally pool.shutdown()
-    }
+  /** [[Parallel.map]] width for one priority class's snapshots. Members
+    * write disjoint directory trees (<root>/<ds>/…, per-ds commit
+    * markers), so they overlap on 4 threads — except while a trace
+    * sink is installed (`Store.traceRowcounts`): the powa_log contract
+    * is a faithful sequential trace and user sinks need not be
+    * thread-safe, so width 1 keeps the exact sequential path. Snapshot
+    * units RETURN their errors; anything escaping one is fatal. */
+  private def snapshotWidth: Int = if (store.traceRowcounts) 1 else 4
+
+  /** The datasources one server's tick walks, in priority order
+    * (:168-181): databases (−3) before statements (−2) before kcache
+    * (−1) before the generic rest (10), so dimension providers run
+    * before their dependents every tick. */
+  private def activeDatasources(srvid: Int,
+      server: ServerConfig): Seq[GenericDatasource] =
+    datasources.filter(d =>
+      registry.isEnabled(srvid, d.name) &&
+      server.versionNum >= d.spec.minVersion).sortBy(_.priority)
 
   private def takeSnapshotLocked(srvid: Int, now: java.sql.Timestamp,
       server: ServerConfig): Int = {
@@ -441,14 +452,7 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     // first left it instead of replaying its stale in-memory copy
     val meta = registry.refreshMeta(srvid)
     meta.coalesceSeq += 1
-    var errors = Vector.empty[String]
-
-    // priority-ordered walk (:168-181): databases (−3) before
-    // statements (−2) before kcache (−1) before the generic rest (10),
-    // so dimension providers run before their dependents every tick
-    val active = datasources.filter(d =>
-      registry.isEnabled(srvid, d.name) &&
-      server.versionNum >= d.spec.minVersion).sortBy(_.priority)
+    val active = activeDatasources(srvid, server)
 
     // One datasource's snapshot, error-isolated exactly as before.
     def snapshotOne(d: GenericDatasource): Option[String] =
@@ -465,53 +469,13 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
       } catch { case e: Exception =>
         Some(s"${d.name}_snapshot: ${e.getMessage}") }
 
-    // Walk priority CLASSES in order (dimension providers before
-    // dependents, as before); datasources WITHIN a class write disjoint
-    // directory trees (<root>/<ds>/…, per-ds commit markers), so their
-    // snapshots are independent — overlap them (guide §2.6: actions are
-    // sequential only because the driver calls them sequentially; a
-    // multi-datasource tick otherwise serializes one small write chain
-    // per datasource). Gated OFF when a trace sink is installed: the
-    // powa_log contract is a faithful sequential trace and user sinks
-    // need not be thread-safe — tracing keeps the exact old path.
-    // Errors are collected in class order either way, so meta.errors
-    // is deterministic.
-    groupByPriority(active).foreach { group =>
-      errors ++= runOrdered(group, snapshotOne).flatten
-    }
-    meta.snapts = Some(now)
-
-    val phase = (meta.coalesceSeq + srvid % 20) % server.powaCoalesce
-    if (phase == 0) {
-      active.foreach { d =>
-        try d.aggregate(store, srvid)
-        catch { case e: Exception =>
-          errors :+= s"${d.name}_aggregate: ${e.getMessage}" }
-      }
-      meta.aggts = Some(now)
-    }
-    if (phase == 1) {
-      active.foreach { d =>
-        try {
-          val cutoff = d.purgeCutoff(now, registry.retentionSec(srvid, d.name))
-          d.purge(store, srvid, cutoff)
-        } catch { case e: Exception =>
-          errors :+= s"${d.name}_purge: ${e.getMessage}" }
-      }
-      // history small-file maintenance rides the purge cadence —
-      // compactMinFiles <= 0 disables
-      if (compactMinFiles > 0) active.foreach { d =>
-        try d.compact(store, srvid, compactMinFiles)
-        catch { case e: Exception =>
-          errors :+= s"${d.name}_compact: ${e.getMessage}" }
-      }
-      meta.purgets = Some(now)
-    }
-
-    // catalog import pass, remote servers only — runs LAST in the tick
-    // like the reference's v_catname loop (powa--5.2.0.sql:3663-3694)
-    if (srvid != 0)
-      errors ++= catalogs.snapshot(srvid, server.catalogRefreshSec, now)
+    // Walk priority CLASSES in order; datasources within a class
+    // overlap (a multi-datasource tick otherwise serializes one small
+    // write chain per datasource). Errors are collected in class order
+    // either way, so meta.errors is deterministic.
+    val snapErrors = groupByPriority(active).flatMap(group =>
+      Parallel.map(group, snapshotWidth)(snapshotOne).flatten)
+    val errors = snapErrors ++ cadenceTail(srvid, server, meta, active, now)
 
     meta.errors ++= errors
     // write THIS server's meta row through (scoped: other servers' rows,
@@ -522,40 +486,44 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     errors.size
   }
 
+  /** The rest of one server's tick after its snapshot pass, shared by
+    * both tick forms: stamp snapts, run the aggregate (phase 0) or the
+    * purge + compaction (phase 1) pass over `active`, then the catalog
+    * import. Every step is error-isolated; returns the errors in walk
+    * order. */
+  private def cadenceTail(srvid: Int, server: ServerConfig,
+      meta: SnapshotMeta, active: Seq[GenericDatasource],
+      now: java.sql.Timestamp): Vector[String] = {
+    var errors = Vector.empty[String]
+    def each(step: String)(f: GenericDatasource => Unit): Unit =
+      active.foreach { d =>
+        try f(d)
+        catch { case e: Exception =>
+          errors :+= s"${d.name}_$step: ${e.getMessage}" }
+      }
+    meta.snapts = Some(now)
+    val phase = (meta.coalesceSeq + srvid % 20) % server.powaCoalesce
+    if (phase == 0) {
+      each("aggregate")(_.aggregate(store, srvid))
+      meta.aggts = Some(now)
+    }
+    if (phase == 1) {
+      each("purge")(d => d.purge(store, srvid,
+        d.purgeCutoff(now, registry.retentionSec(srvid, d.name))))
+      // history small-file maintenance rides the purge cadence —
+      // compactMinFiles <= 0 disables
+      if (compactMinFiles > 0)
+        each("compact")(_.compact(store, srvid, compactMinFiles))
+      meta.purgets = Some(now)
+    }
+    // catalog import pass, remote servers only — runs LAST in the tick
+    // like the reference's v_catname loop (powa--5.2.0.sql:3663-3694)
+    if (srvid != 0)
+      errors ++= catalogs.snapshot(srvid, server.catalogRefreshSec, now)
+    errors
+  }
+
   // ---- vectorized fleet tick ---------------------------------------
-
-  /** One acquired per-server snapshot lock (in-process mutex + the
-    * cross-process file lock), released in [[releaseLock]]. */
-  private case class HeldLock(srvid: Int,
-      mutex: java.util.concurrent.locks.ReentrantLock,
-      ch: java.nio.channels.FileChannel,
-      fl: java.nio.channels.FileLock)
-
-  /** Try-acquire one server's snapshot lock (same NOWAIT semantics as
-    * [[takeSnapshot]]); None when a concurrent snapshot holds it. */
-  private def tryAcquireLock(srvid: Int): Option[HeldLock] = {
-    val mutex = snapshotLocks.computeIfAbsent(srvid,
-      _ => new java.util.concurrent.locks.ReentrantLock())
-    if (!mutex.tryLock()) return None
-    val lockDir = java.nio.file.Paths.get(storageRoot, "_locks")
-    java.nio.file.Files.createDirectories(lockDir)
-    try {
-      val ch = java.nio.channels.FileChannel.open(
-        lockDir.resolve(s"srvid=$srvid.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      val fl =
-        try ch.tryLock()
-        catch { case _: java.nio.channels.OverlappingFileLockException =>
-          ch.close(); mutex.unlock(); return None }
-      if (fl == null) { ch.close(); mutex.unlock(); return None }
-      Some(HeldLock(srvid, mutex, ch, fl))
-    } catch { case e: Throwable => mutex.unlock(); throw e }
-  }
-
-  private def releaseLock(h: HeldLock): Unit = {
-    try { h.fl.release(); h.ch.close() } finally h.mutex.unlock()
-  }
 
   /** Vectorized fleet tick — `takeSnapshot` for MANY servers with one
     * Spark job per (datasource, sink tier) instead of one per (server,
@@ -581,16 +549,17 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
   def takeSnapshotFleet(srvids: Seq[Int],
       now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis()))
       : Map[Int, Int] = {
-    val ids = srvids.distinct.sorted
     val held = scala.collection.mutable.ArrayBuffer.empty[HeldLock]
     val busy = scala.collection.mutable.ArrayBuffer.empty[Int]
-    ids.foreach { id =>
-      tryAcquireLock(id) match {
-        case Some(h) => held += h
-        case None => busy += id
-      }
-    }
     try {
+      // acquired inside the try: if one acquire throws, the locks
+      // already taken are released below
+      srvids.distinct.sorted.foreach { id =>
+        tryAcquireLock(id) match {
+          case Some(h) => held += h
+          case None => busy += id
+        }
+      }
       val servers = held.map(h => h.srvid -> registry.server(h.srvid)).toMap
       val active = held.map(_.srvid).filter(servers(_).frequencySec != -1)
       // re-read + bump each persisted meta under the lock, like the
@@ -598,23 +567,20 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
       val metas = active.map { id =>
         val m = registry.refreshMeta(id); m.coalesceSeq += 1; id -> m
       }.toMap
+      val activeDs = active.map(id =>
+        id -> activeDatasources(id, servers(id))).toMap
       val errors = scala.collection.mutable.Map.empty[Int, Vector[String]]
         .withDefaultValue(Vector.empty)
-      def activeDs(id: Int) = datasources.filter(d =>
-        registry.isEnabled(id, d.name) &&
-        servers(id).versionNum >= d.spec.minVersion)
 
       // snapshot pass: priority CLASS order preserved ACROSS the fleet
       // — every server's databases snapshot lands before any server's
       // statements snapshot, which honors the same dimension-before-
       // dependent ordering the per-server walk does. WITHIN a class,
-      // datasources overlap on a bounded pool exactly like the
-      // per-server tick's snapshot pass (disjoint <root>/<ds>/ trees,
-      // per-ds commit markers; trace-sink runs stay sequential): at
-      // production fleet scale the tick otherwise serializes ~20 fleet
-      // writes of the same priority back to back. Each worker RETURNS
-      // its per-server errors; they merge on this thread in class
-      // order, so meta.errors stays deterministic.
+      // datasources overlap exactly like the per-server tick's
+      // snapshot pass: at production fleet scale the tick otherwise
+      // serializes ~20 fleet writes of the same priority back to back.
+      // Each worker RETURNS its per-server errors; they merge on this
+      // thread in class order, so meta.errors stays deterministic.
       def fleetOne(d: GenericDatasource): Seq[(Int, String)] = {
         val staged = active.filter(id =>
           activeDs(id).contains(d) &&
@@ -645,43 +611,15 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
         }
       }
       groupByPriority(datasources).foreach { group =>
-        runOrdered(group, fleetOne).foreach(_.foreach { case (id, msg) =>
-          errors(id) :+= msg })
+        Parallel.map(group, snapshotWidth)(fleetOne).foreach(
+          _.foreach { case (id, msg) => errors(id) :+= msg })
       }
 
-      // per-server tail: cadence phases, catalogs, metas — unchanged
+      // per-server tail: the same cadence phases and catalog import as
+      // takeSnapshot, then the meta row
       active.foreach { id =>
-        val meta = metas(id)
-        meta.snapts = Some(now)
-        val server = servers(id)
-        val acts = activeDs(id).sortBy(_.priority)
-        val phase = (meta.coalesceSeq + id % 20) % server.powaCoalesce
-        if (phase == 0) {
-          acts.foreach { d =>
-            try d.aggregate(store, id)
-            catch { case e: Exception =>
-              errors(id) :+= s"${d.name}_aggregate: ${e.getMessage}" }
-          }
-          meta.aggts = Some(now)
-        }
-        if (phase == 1) {
-          acts.foreach { d =>
-            try {
-              val cutoff = d.purgeCutoff(now, registry.retentionSec(id, d.name))
-              d.purge(store, id, cutoff)
-            } catch { case e: Exception =>
-              errors(id) :+= s"${d.name}_purge: ${e.getMessage}" }
-          }
-          if (compactMinFiles > 0) acts.foreach { d =>
-            try d.compact(store, id, compactMinFiles)
-            catch { case e: Exception =>
-              errors(id) :+= s"${d.name}_compact: ${e.getMessage}" }
-          }
-          meta.purgets = Some(now)
-        }
-        if (id != 0)
-          errors(id) ++= catalogs.snapshot(id, server.catalogRefreshSec, now)
-        meta.errors ++= errors(id)
+        errors(id) ++= cadenceTail(id, servers(id), metas(id), activeDs(id), now)
+        metas(id).errors ++= errors(id)
       }
       // ONE batched metas write for the whole fleet (vs one per server)
       if (active.nonEmpty) registry.persistMetas(active.toSet)

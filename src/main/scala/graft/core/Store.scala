@@ -50,8 +50,10 @@ final class Store(val spark: SparkSession, val root: String) {
 
   /** Label the Spark jobs `body` launches (guide §1.5) and restore the
     * caller's label after — thread-local, so concurrent commit threads
-    * label independently. Pure UI/diagnostics: lets QueryProf and the
-    * Spark UI attribute the engine's many small per-tick jobs. */
+    * label independently. Pure UI/diagnostics: perfbench's `--trace 1`
+    * layer breakdown (its `store.*_job_ms` metrics group jobs by the
+    * `store: <op>` prefix) and the Spark UI attribute the engine's many
+    * small per-tick jobs by it. */
   private def labeled[T](desc: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -711,34 +713,6 @@ final class Store(val spark: SparkSession, val root: String) {
   private def snapMarker(ds: String, srvid: Int): Path =
     Paths.get(root, ds, s".snapcommit_srvid=$srvid")
 
-  /** Run independent pre-commit work units concurrently (optimization
-    * guide §2.6 — actions are only sequential because the driver calls
-    * them sequentially; overlapping them overlaps their PLANNING and
-    * job-scheduling latency, which dominates the engine's small
-    * per-tick writes). First failure is rethrown after every unit
-    * finishes, so the reachable on-disk states are exactly those of a
-    * sequential loop interrupted mid-way — each unit is an independent
-    * write to its own directory, resolved by the same recovery. */
-  private def runConcurrently(work: Seq[() => Unit]): Unit = {
-    if (work.sizeIs <= 1) { work.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(work.size, 4))
-    try {
-      val fs = work.map { w =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = w()
-        })
-      }
-      var failure: Option[Throwable] = None
-      fs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          if (failure.isEmpty) failure = Some(e.getCause) }
-      }
-      failure.foreach(throw _)
-    } finally pool.shutdown()
-  }
-
   /** Atomically land a snapshot's sink batches and drain its staging
     * partition — the tick's second transaction boundary. Each (tier,
     * df) in `sinks` is appended to that tier's `srvid` partition;
@@ -749,13 +723,14 @@ final class Store(val spark: SparkSession, val root: String) {
     * must complete before the commit point but are independent of the
     * sink stage writes (the statements/qualstats dimension rewrites —
     * swap-replaces of their own partitions, re-derived on a
-    * rolled-back retry). Sinks and alongside units run CONCURRENTLY:
-    * every unit reads the caller-cached staging frame and writes a
-    * distinct invisible directory, and the commit marker is created
-    * only after all of them return, so a failure anywhere still rolls
-    * the tick back exactly as the sequential form did (stage dirs are
-    * swept by the next recoverSnapshot; a completed dim rewrite is the
-    * already-documented visible-early case). */
+    * rolled-back retry). Sinks and alongside units run CONCURRENTLY
+    * on [[Parallel.map]], width 4: every unit reads the caller-cached
+    * staging frame and writes a distinct invisible directory, and the
+    * commit marker is created only after all of them return, so a
+    * failure anywhere still rolls the tick back exactly as the
+    * sequential form did (stage dirs are swept by the next
+    * recoverSnapshot; a completed dim rewrite is the already-documented
+    * visible-early case). */
   def snapshotCommit(ds: String, stagingTier: String, srvid: Int,
       sinks: Seq[(String, DataFrame)],
       alongside: Seq[() => Unit] = Nil): Unit = {
@@ -764,12 +739,12 @@ final class Store(val spark: SparkSession, val root: String) {
     // the pool starts and restored after every unit has joined, so the
     // concurrent writers only ever READ it
     tickCodegenScope {
-      runConcurrently(sinks.map { case (tier, df) => () =>
+      Parallel.map(sinks.map { case (tier, df) => () =>
         labeled(s"store: snapshot $ds->$tier srvid=$srvid") {
           df.drop("srvid").write.mode("overwrite")
             .parquet(snapStageDir(ds, tier, srvid).toString)
         }
-      } ++ alongside)
+      } ++ alongside, 4)(_())
     }
     Files.createDirectory(snapMarker(ds, srvid)) // commit point
     dropPartition(ds, stagingTier, srvid)
@@ -857,41 +832,23 @@ final class Store(val spark: SparkSession, val root: String) {
       }
       deleteRecursively(tmp)
     }
-    // The per-server commit protocol, UNCHANGED in shape but run on a
-    // bounded driver-side pool: each server's marker → drain → promote →
-    // unmark touches only srvid-scoped paths (stage dir, marker dir,
-    // staging partition link, live version link, doom markers, manifest
-    // file are all keyed by srvid), so servers commit independently —
-    // the same independence the crash-recovery contract already relies
-    // on. Measured: the sequential loop was ~35 ms/server of driver FS
-    // ops (marker + drop + promote + manifest republish), i.e. 35 s of
-    // the 1000-server fleet tick AFTER the Spark fan-out was fixed —
-    // the new driver-side bottleneck (guide §5). A failed server's
-    // exception is rethrown after every other server finishes its
-    // commit, which leaves exactly the states N sequential commits
-    // interrupted mid-loop would: some rolled forward, the failed one
-    // resolved by its marker, the rest retry-safe.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, Runtime.getRuntime.availableProcessors()))
-    try {
-      val fs = srvids.map { id =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            Files.createDirectory(snapMarker(ds, id)) // commit point
-            dropPartition(ds, stagingTier, id)
-            promoteSnapshot(ds, id)
-            Files.deleteIfExists(snapMarker(ds, id))
-          }
-        })
-      }
-      var failure: Option[Throwable] = None
-      fs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          if (failure.isEmpty) failure = Some(e.getCause) }
-      }
-      failure.foreach(throw _)
-    } finally pool.shutdown()
+    // The per-server commit protocol, UNCHANGED in shape, on
+    // Parallel.map: each server's marker → drain → promote → unmark
+    // touches only srvid-scoped paths (stage dir, marker dir, staging
+    // partition link, live version link, doom markers, manifest file),
+    // so servers commit independently — the same independence the
+    // crash-recovery contract already relies on. Measured: the
+    // sequential loop was ~35 ms/server of driver FS ops, i.e. 35 s of
+    // the 1000-server fleet tick. A server skipped after a
+    // failure keeps its stage dir without a marker, which the next
+    // recoverSnapshot rolls back, as after a crash mid-loop.
+    Parallel.map(srvids,
+        math.min(32, Runtime.getRuntime.availableProcessors())) { id =>
+      Files.createDirectory(snapMarker(ds, id)) // commit point
+      dropPartition(ds, stagingTier, id)
+      promoteSnapshot(ds, id)
+      Files.deleteIfExists(snapMarker(ds, id))
+    }
   }
 
   /** Sweep `.snapfleet_*` temp dirs a crashed fleet write left behind —

@@ -1542,4 +1542,81 @@ class EngineSpec extends AnyFunSuite {
       GenericDatasource.Staging, s3))
     assert(e.registry.meta(s3).errors.exists(_.contains("concurrent")))
   }
+
+  test("a fatal error in one snapshot waits for its running siblings " +
+      "before the tick releases its lock") {
+    import spark.implicits._
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(id = 90, hostname = "h",
+      powaCoalesce = 100, retentionSec = 86400))
+    val (early, late) = ("powa_stat_bgwriter", "powa_stat_checkpointer")
+    assert(Seq(early, late).map(e.datasource(_).priority) === Seq(10.0, 10.0))
+    e.ingest(early, bgwriterBatch(srvid, 1))
+    e.ingest(late, Seq((srvid, Timestamp.valueOf("2024-01-01 00:01:00"),
+        1L, 2L, 3.0, 4.0, 5L))
+      .toDF("srvid", "ts", "num_timed", "num_requested", "write_time",
+        "sync_time", "buffers_written"))
+    // the later snapshot is RUNNING when the earlier one fails (a unit
+    // that has not started is skipped instead), then takes another 1 s
+    val lateRunning = new java.util.concurrent.CountDownLatch(1)
+    e.log = line =>
+      if (line == s"running ${early}_snapshot") {
+        lateRunning.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        throw new AssertionError(s"fatal in ${early}_snapshot")
+      } else if (line == s"running ${late}_snapshot") {
+        lateRunning.countDown()
+        Thread.sleep(1000)
+      }
+    e.store.traceRowcounts = false // the concurrent snapshot path
+    val ex = intercept[AssertionError] {
+      e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:01:30"))
+    }
+    assert(ex.getMessage === s"fatal in ${early}_snapshot")
+    // the sibling had committed before the tick returned and released
+    // the server's lock
+    assert(!e.store.hasPartition(late, GenericDatasource.Staging, srvid))
+    assert(e.store.readPartition(late, GenericDatasource.Current, srvid,
+      GenericDatasource.currentNoSrvid(Specs.byName(late))).count() === 1)
+    val root = java.nio.file.Paths.get(e.store.root)
+    def listing(): List[String] = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.map(root.relativize(_).toString).toList.sorted
+      finally s.close()
+    }
+    val atReturn = listing()
+    Thread.sleep(1000)
+    assert(listing() === atReturn, "nothing writes after the tick returned")
+    e.clearLog()
+    assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:02:30")) === 0)
+    assert(!e.store.hasPartition(early, GenericDatasource.Staging, srvid))
+  }
+
+  test("snapshot locks: a failed acquire releases every lock it took") {
+    val e = mkEngine()
+    val Seq(a, b) = Seq(91, 92).map(id =>
+      e.registry.registerServer(ServerConfig(id = id, hostname = "h")))
+    val lockDir = java.nio.file.Paths.get(e.store.root, "_locks")
+    // the next tick runs on another thread, as a scheduler's would: the
+    // in-process mutex is reentrant, so only another thread sees a leak
+    def tickElsewhere(id: Int, ts: String): Int = {
+      var out: Either[Throwable, Int] = null
+      val t = new Thread(() => out =
+        try Right(e.takeSnapshot(id, Timestamp.valueOf(ts)))
+        catch { case x: Throwable => Left(x) })
+      t.start(); t.join()
+      out.fold(x => throw x, identity)
+    }
+    // (a) `_locks` is a regular file: creating the lock dir throws
+    java.nio.file.Files.writeString(lockDir, "not a directory")
+    intercept[java.io.IOException](e.takeSnapshotFleet(Seq(a)))
+    java.nio.file.Files.delete(lockDir)
+    assert(tickElsewhere(a, "2024-01-01 00:01:00") === 0)
+    // (b) b's lock file is a directory: its open throws while a's lock
+    // (a < b, acquired first) is held
+    val bLock = lockDir.resolve(s"srvid=$b.lock")
+    java.nio.file.Files.createDirectories(bLock)
+    intercept[java.io.IOException](e.takeSnapshotFleet(Seq(a, b)))
+    java.nio.file.Files.delete(bLock)
+    assert(tickElsewhere(a, "2024-01-01 00:02:00") === 0)
+  }
 }
