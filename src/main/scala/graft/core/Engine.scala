@@ -190,9 +190,10 @@ class GenericDatasource(val spec: DatasourceSpec) {
   }
 
   /** Purge (generated `{ds}_purge`, :1542-1570): drop history rows whose
-    * range fell entirely before the retention cutoff. Whole months before
-    * the cutoff month drop as directories (O(1), no read); only the
-    * boundary month is rewritten row-level. */
+    * range fell entirely before the retention cutoff. A month bucket
+    * whose every range provably ended before the cutoff drops as a
+    * directory (O(1), no read); any other bucket up to the cutoff's
+    * month is rewritten row-level. */
   def purge(store: Store, srvid: Int, cutoff: java.sql.Timestamp): Unit = {
     purgeBucketedTier(store, srvid, cutoff, History, historyNoSrvid(spec))
     dbSpec.foreach(dbs =>
@@ -221,14 +222,25 @@ class GenericDatasource(val spec: DatasourceSpec) {
   protected def purgeBucketedTier(store: Store, srvid: Int,
       cutoff: java.sql.Timestamp, tier: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val cutoffMonth = new java.text.SimpleDateFormat("yyyy-MM").format(cutoff)
+    // buckets are `date_format(range_start)` months in the SESSION time
+    // zone, so the cutoff's month is named in that zone too
+    val cutoffMonth = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
+      .withZone(org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+        store.spark.conf.get("spark.sql.session.timeZone")))
+      .format(cutoff.toInstant)
     // buckets logically dropped LAST purge have had their one-cycle
     // retention: physically delete them before this tick's drops
     store.processDoomedBuckets(name, tier, srvid)
+    // a later month's ranges all start after the cutoff: kept whole.
+    // An earlier month's bucket drops whole only when its manifest
+    // stats prove every range ended before the cutoff — a range that
+    // starts in it can end after (the reference keeps any row with
+    // upper(coalesce_range) >= cutoff)
+    val ended = store.bucketsEndingBefore(name, tier, srvid, cutoff)
     val (stale, boundary) = store.listBuckets(name, tier, srvid)
-      .partition(_ < cutoffMonth)
+      .filter(_ <= cutoffMonth).partition(ended)
     stale.foreach(b => store.dropBucket(name, tier, srvid, b))
-    if (boundary.contains(cutoffMonth)) { // bucket present => rows present
+    if (boundary.nonEmpty) { // bucket present => rows present
       val hist = store.readPartition(name, tier, srvid, schema)
       store.overwritePartition(name, tier, srvid,
         Coalesce.purge(hist, cutoff)
@@ -425,14 +437,16 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
       ds: Seq[GenericDatasource]): Seq[Seq[GenericDatasource]] =
     ds.groupBy(_.priority).toSeq.sortBy(_._1).map(_._2)
 
-  /** [[Parallel.map]] width for one priority class's snapshots. Members
-    * write disjoint directory trees (<root>/<ds>/…, per-ds commit
-    * markers), so they overlap on 4 threads — except while a trace
-    * sink is installed (`Store.traceRowcounts`): the powa_log contract
-    * is a faithful sequential trace and user sinks need not be
-    * thread-safe, so width 1 keeps the exact sequential path. Snapshot
-    * units RETURN their errors; anything escaping one is fatal. */
-  private def snapshotWidth: Int = if (store.traceRowcounts) 1 else 4
+  /** The one [[Parallel.map]] width for a tick's per-datasource units:
+    * one priority class's snapshots, and the cadence tail's aggregates or
+    * purge + compactions. Every unit writes only its own datasource's
+    * directory tree (<root>/<ds>/…, per-ds commit markers), so units
+    * overlap on 4 threads — except while a trace sink is installed
+    * (`Store.traceRowcounts`): the powa_log contract is a faithful
+    * sequential trace and user sinks need not be thread-safe, so width
+    * 1 keeps the exact sequential path. Units RETURN their errors;
+    * anything escaping one is fatal. */
+  private def datasourceWidth: Int = if (store.traceRowcounts) 1 else 4
 
   /** The datasources one server's tick walks, in priority order
     * (:168-181): databases (−3) before statements (−2) before kcache
@@ -474,7 +488,7 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     // write chain per datasource). Errors are collected in class order
     // either way, so meta.errors is deterministic.
     val snapErrors = groupByPriority(active).flatMap(group =>
-      Parallel.map(group, snapshotWidth)(snapshotOne).flatten)
+      Parallel.map(group, datasourceWidth)(snapshotOne).flatten)
     val errors = snapErrors ++ cadenceTail(srvid, server, meta, active, now)
 
     meta.errors ++= errors
@@ -489,31 +503,45 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
   /** The rest of one server's tick after its snapshot pass, shared by
     * both tick forms: stamp snapts, run the aggregate (phase 0) or the
     * purge + compaction (phase 1) pass over `active`, then the catalog
-    * import. Every step is error-isolated; returns the errors in walk
-    * order. */
+    * import. Each pass is one [[Parallel.map]] unit per datasource at
+    * [[datasourceWidth]], with no priority barrier: no tail step reads
+    * another datasource's tiers. Every step is error-isolated; the
+    * errors merge on this thread in the sequential walk's order (every
+    * purge error, then every compact error, each in `active` order). */
   private def cadenceTail(srvid: Int, server: ServerConfig,
       meta: SnapshotMeta, active: Seq[GenericDatasource],
       now: java.sql.Timestamp): Vector[String] = {
+    // one datasource's step, traced and error-isolated like a snapshot
+    def step(d: GenericDatasource, name: String)(f: => Unit): Option[String] =
+      try {
+        log(s"running ${d.name}_$name")
+        f
+        None
+      } catch { case e: Exception => Some(s"${d.name}_$name: ${e.getMessage}") }
     var errors = Vector.empty[String]
-    def each(step: String)(f: GenericDatasource => Unit): Unit =
-      active.foreach { d =>
-        try f(d)
-        catch { case e: Exception =>
-          errors :+= s"${d.name}_$step: ${e.getMessage}" }
-      }
     meta.snapts = Some(now)
     val phase = (meta.coalesceSeq + srvid % 20) % server.powaCoalesce
     if (phase == 0) {
-      each("aggregate")(_.aggregate(store, srvid))
+      errors ++= Parallel.map(active, datasourceWidth)(d =>
+        step(d, "aggregate")(d.aggregate(store, srvid))).flatten
       meta.aggts = Some(now)
     }
     if (phase == 1) {
-      each("purge")(d => d.purge(store, srvid,
-        d.purgeCutoff(now, registry.retentionSec(srvid, d.name))))
+      // the registry is read here, on the calling thread
+      val cutoffs = active.map(d =>
+        d.purgeCutoff(now, registry.retentionSec(srvid, d.name)))
       // history small-file maintenance rides the purge cadence —
       // compactMinFiles <= 0 disables
-      if (compactMinFiles > 0)
-        each("compact")(_.compact(store, srvid, compactMinFiles))
+      val minFiles = compactMinFiles
+      val outcomes = Parallel.map(active.zip(cutoffs), datasourceWidth) {
+        case (d, cutoff) =>
+          val purgeError = step(d, "purge")(d.purge(store, srvid, cutoff))
+          val compactError =
+            if (minFiles > 0) step(d, "compact")(d.compact(store, srvid, minFiles))
+            else None
+          (purgeError, compactError)
+      }
+      errors ++= outcomes.flatMap(_._1) ++ outcomes.flatMap(_._2)
       meta.purgets = Some(now)
     }
     // catalog import pass, remote servers only — runs LAST in the tick
@@ -611,7 +639,7 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
         }
       }
       groupByPriority(datasources).foreach { group =>
-        Parallel.map(group, snapshotWidth)(fleetOne).foreach(
+        Parallel.map(group, datasourceWidth)(fleetOne).foreach(
           _.foreach { case (id, msg) => errors(id) :+= msg })
       }
 

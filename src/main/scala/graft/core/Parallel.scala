@@ -8,7 +8,9 @@ import java.util.concurrent.atomic.AtomicBoolean
   * which dominates the engine's small per-tick writes (Spark actions
   * are sequential only because the driver calls them sequentially).
   * Its callers: a tick's same-priority datasource
-  * snapshots (width 4; they write disjoint `<root>/<ds>/` trees), a
+  * snapshots and its cadence tail's per-datasource aggregate or
+  * purge + compact units (both at `Engine.datasourceWidth`, 4; each unit
+  * writes only its own `<root>/<ds>/` tree), a
   * snapshot commit's pre-marker sink and dimension writes (width 4; each
   * writes its own invisible directory), and the fleet commit's
   * per-server marker → drain → promote (width `min(32, cores)`; every

@@ -363,6 +363,27 @@ final class Store(val spark: SparkSession, val root: String) {
     }
   }
 
+  /** Month buckets of one server's tier in which every row provably
+    * ends before `cutoff`: each of the bucket's files has a manifest
+    * `range_end` maximum below it. Retention purge may drop only these
+    * whole — a coalesced range that starts in an earlier month can end
+    * after the cutoff. A file without the stat (directory layout,
+    * all-null column) proves nothing. One manifest read, no Spark job. */
+  def bucketsEndingBefore(ds: String, tier: String, srvid: Int,
+      cutoff: java.sql.Timestamp): Set[String] = {
+    val cutoffUs = cutoff.getTime * 1000L // stats are µs; floor is safe
+    val d = dir(ds, tier)
+    AtomicSwap.manifestEntries(d, s"srvid=$srvid")
+      .getOrElse(Seq.empty)
+      .filter(_._1.toString.endsWith(".parquet"))
+      .groupBy { case (p, _) => d.relativize(p).iterator().asScala
+        .map(_.toString).find(_.startsWith("bucket=")) }
+      .collect { case (Some(b), files)
+          if files.forall(_._2.get("range_end").exists(_._2 < cutoffUs)) =>
+        b.stripPrefix("bucket=") }
+      .toSet
+  }
+
   /** Public face of [[processDooms]] — the purge pass calls it at the
     * top of each tick so a bucket doomed last purge is physically
     * deleted this purge (one full cycle of retention, the same

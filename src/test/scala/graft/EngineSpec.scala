@@ -25,12 +25,23 @@ class EngineSpec extends AnyFunSuite {
   }
 
   /** A deterministic bgwriter staging batch for one tick. */
-  private def bgwriterBatch(srvid: Int, tick: Int): DataFrame = {
+  private def bgwriterBatch(srvid: Int, tick: Int): DataFrame =
+    bgwriterAt(srvid, Timestamp.valueOf(f"2024-01-01 00:0$tick:00"), tick)
+
+  /** One bgwriter sample at `ts`, counters scaled by `n`. */
+  private def bgwriterAt(srvid: Int, ts: Timestamp, n: Long): DataFrame = {
     import spark.implicits._
-    Seq((srvid, Timestamp.valueOf(f"2024-01-01 00:0$tick:00"),
-      100L * tick, 10L * tick, 5L * tick, 2L * tick, 1L * tick))
+    Seq((srvid, ts, 100L * n, 10L * n, 5L * n, 2L * n, 1L * n))
       .toDF("srvid", "ts", "buffers_clean", "maxwritten_clean",
         "buffers_backend", "buffers_backend_fsync", "buffers_alloc")
+  }
+
+  /** One checkpointer sample at `ts`. */
+  private def checkpointerAt(srvid: Int, ts: Timestamp): DataFrame = {
+    import spark.implicits._
+    Seq((srvid, ts, 1L, 2L, 3.0, 4.0, 5L))
+      .toDF("srvid", "ts", "num_timed", "num_requested", "write_time",
+        "sync_time", "buffers_written")
   }
 
   private def tierCount(e: Engine, ds: String, tier: String): Long = {
@@ -1552,10 +1563,7 @@ class EngineSpec extends AnyFunSuite {
     val (early, late) = ("powa_stat_bgwriter", "powa_stat_checkpointer")
     assert(Seq(early, late).map(e.datasource(_).priority) === Seq(10.0, 10.0))
     e.ingest(early, bgwriterBatch(srvid, 1))
-    e.ingest(late, Seq((srvid, Timestamp.valueOf("2024-01-01 00:01:00"),
-        1L, 2L, 3.0, 4.0, 5L))
-      .toDF("srvid", "ts", "num_timed", "num_requested", "write_time",
-        "sync_time", "buffers_written"))
+    e.ingest(late, checkpointerAt(srvid, Timestamp.valueOf("2024-01-01 00:01:00")))
     // the later snapshot is RUNNING when the earlier one fails (a unit
     // that has not started is skipped instead), then takes another 1 s
     val lateRunning = new java.util.concurrent.CountDownLatch(1)
@@ -1577,15 +1585,9 @@ class EngineSpec extends AnyFunSuite {
     assert(!e.store.hasPartition(late, GenericDatasource.Staging, srvid))
     assert(e.store.readPartition(late, GenericDatasource.Current, srvid,
       GenericDatasource.currentNoSrvid(Specs.byName(late))).count() === 1)
-    val root = java.nio.file.Paths.get(e.store.root)
-    def listing(): List[String] = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.map(root.relativize(_).toString).toList.sorted
-      finally s.close()
-    }
-    val atReturn = listing()
+    val atReturn = storeListing(e)
     Thread.sleep(1000)
-    assert(listing() === atReturn, "nothing writes after the tick returned")
+    assert(storeListing(e) === atReturn, "nothing writes after the tick returned")
     e.clearLog()
     assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:02:30")) === 0)
     assert(!e.store.hasPartition(early, GenericDatasource.Staging, srvid))
@@ -1618,5 +1620,180 @@ class EngineSpec extends AnyFunSuite {
     intercept[java.io.IOException](e.takeSnapshotFleet(Seq(a, b)))
     java.nio.file.Files.delete(bLock)
     assert(tickElsewhere(a, "2024-01-01 00:02:00") === 0)
+  }
+
+  /** Every path under the engine's store root, sorted. */
+  private def storeListing(e: Engine): List[String] = {
+    val root = java.nio.file.Paths.get(e.store.root)
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala.map(root.relativize(_).toString).toList.sorted
+    finally s.close()
+  }
+
+  private def utc(iso: String): Timestamp =
+    Timestamp.from(java.time.Instant.parse(iso))
+
+  test("retention purge keeps a range that starts before the cutoff's " +
+      "month and ends after the cutoff") {
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(
+      id = 180, hostname = "h", powaCoalesce = 5, retentionSec = 86400))
+    val ds = "powa_stat_bgwriter"
+    // five ticks sample Jan 31 20:00 .. Feb 1 02:00 (UTC, the session
+    // zone); the fifth aggregates them into one range in bucket 2024-01
+    Seq("2024-01-31T20:00:00Z", "2024-01-31T21:00:00Z",
+        "2024-01-31T22:00:00Z", "2024-01-31T23:00:00Z",
+        "2024-02-01T02:00:00Z").zipWithIndex.foreach { case (ts, i) =>
+      e.ingest(ds, bgwriterAt(srvid, utc(ts), i + 1))
+      assert(e.takeSnapshot(srvid,
+        new Timestamp(utc(ts).getTime + 30000L)) === 0)
+    }
+    assert(e.store.listBuckets(ds, GenericDatasource.History, srvid) ===
+      Seq("2024-01"))
+    // tick 6 purges with cutoff Feb 2 01:00 - 1 day = Feb 1 01:00, inside
+    // the range: the reference keeps any row whose upper bound is at or
+    // after the cutoff
+    val purgeTick = utc("2024-02-02T01:00:00Z")
+    assert(e.takeSnapshot(srvid, purgeTick) === 0)
+    assert(e.registry.meta(srvid).purgets === Some(purgeTick))
+    val kept = e.store.readPartition(ds, GenericDatasource.History, srvid,
+        GenericDatasource.historyNoSrvid(Specs.byName(ds)))
+      .select(size(col("records")), col("range_end")).collect()
+      .map(r => (r.getInt(0), r.getTimestamp(1))).toSeq
+    assert(kept === Seq((5, utc("2024-02-01T02:00:00Z"))))
+    assert(e.store.listBuckets(ds, GenericDatasource.History, srvid) ===
+      Seq("2024-01"))
+  }
+
+  test("retention purge names the cutoff's month in the session time zone") {
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(
+      id = 280, hostname = "h", powaCoalesce = 5, retentionSec = 86400))
+    val ds = "powa_stat_bgwriter"
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "Pacific/Kiritimati") // UTC+14
+    try {
+      // five ticks sample Jan 31 10:00 .. 10:20 UTC, which is Feb 1
+      // 00:00 .. 00:20 in the session zone: the range lands in 2024-02
+      (0 until 5).foreach { i =>
+        val ts = new Timestamp(utc("2024-01-31T10:00:00Z").getTime + i * 300000L)
+        e.ingest(ds, bgwriterAt(srvid, ts, i + 1))
+        assert(e.takeSnapshot(srvid, new Timestamp(ts.getTime + 30000L)) === 0)
+      }
+      assert(e.store.listBuckets(ds, GenericDatasource.History, srvid) ===
+        Seq("2024-02"))
+      // the cutoff, Jan 31 12:00 UTC, is Feb 1 02:00 in the session zone;
+      // the whole range ended before it
+      assert(e.takeSnapshot(srvid, utc("2024-02-01T12:00:00Z")) === 0)
+      assert(e.store.listBuckets(ds, GenericDatasource.History, srvid).isEmpty)
+      assert(tierCount(e, ds, GenericDatasource.History) === 0)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("tail passes: failing aggregate, purge and compact steps leave the " +
+      "other datasources' steps done, errors as in a width-1 tick") {
+    import spark.implicits._
+    val (bgw, ckp, uf) =
+      ("powa_stat_bgwriter", "powa_stat_checkpointer", "powa_user_functions")
+    def userFunctionsAt(srvid: Int, ts: Timestamp): DataFrame =
+      Seq((srvid, ts, 100L, 1L, 10L, 5.0, 7.0))
+        .toDF("srvid", "ts", "dbid", "funcid", "calls", "total_time", "self_time")
+    // three ticks (coalesce 5, srvid % 20 == 3): a plain, an aggregate and
+    // a purge tick; returns the errors and each datasource's (current,
+    // history) counts
+    def run(sequential: Boolean): (Vector[String], Seq[(Long, Long)]) = {
+      val e = mkEngine()
+      e.compactMinFiles = 1
+      val srvid = e.registry.registerServer(ServerConfig(id = 243,
+        hostname = "h", powaCoalesce = 5))
+      val walk = e.datasources.sortBy(_.priority).map(_.name)
+      def inWalkOrder(ds: Seq[String]) = ds.sortBy(walk.indexOf(_))
+      val failing = new java.util.concurrent.atomic.AtomicReference(
+        Seq.empty[(String, String)])
+      e.log = line => {
+        val units = failing.get
+        val i = units.indexWhere { case (d, s) => line == s"running ${d}_$s" }
+        if (i >= 0) {
+          // the earlier a failing unit walks, the later it fails, so a
+          // concurrent tail completes them out of walk order
+          Thread.sleep(300L * (units.size - i))
+          throw new IllegalStateException("injected")
+        }
+      }
+      if (!sequential) e.store.traceRowcounts = false // width 4
+      def tick(ts: String): Int = e.takeSnapshot(srvid, Timestamp.valueOf(ts))
+      val t1 = Timestamp.valueOf("2024-01-01 00:01:00")
+      val t2 = Timestamp.valueOf("2024-01-01 00:02:00")
+      Seq(t1, t2).foreach { ts =>
+        e.ingest(bgw, bgwriterAt(srvid, ts, 1))
+        e.ingest(ckp, checkpointerAt(srvid, ts))
+        e.ingest(uf, userFunctionsAt(srvid, ts))
+        if (ts == t1) assert(tick("2024-01-01 00:01:30") === 0)
+      }
+      failing.set(inWalkOrder(Seq(bgw, uf)).map(_ -> "aggregate"))
+      assert(tick("2024-01-01 00:02:30") === 2)
+      failing.set(inWalkOrder(Seq(ckp, uf)).map(_ -> "purge") :+
+        (ckp -> "compact"))
+      assert(tick("2024-01-01 00:03:30") === 3)
+      val errors = e.registry.meta(srvid).errors
+      assert(errors === (
+        inWalkOrder(Seq(bgw, uf)).map(_ + "_aggregate: injected") ++
+        inWalkOrder(Seq(ckp, uf)).map(_ + "_purge: injected") :+
+        s"${ckp}_compact: injected"))
+      (errors, Seq(bgw, ckp, uf).map(d =>
+        (tierCount(e, d, GenericDatasource.Current),
+         tierCount(e, d, GenericDatasource.History))))
+    }
+    val (seqErrors, seqTiers) = run(sequential = true)
+    val (errors, tiers) = run(sequential = false)
+    assert(errors === seqErrors)
+    assert(tiers === seqTiers)
+    // checkpointer's aggregate ran beside the failing ones
+    assert(tiers === Seq((2L, 0L), (0L, 1L), (2L, 0L)))
+  }
+
+  test("a fatal error in one tail unit waits for its running siblings " +
+      "before the tick releases its lock") {
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(id = 263, hostname = "h",
+      powaCoalesce = 5))
+    val (early, late) = ("powa_stat_bgwriter", "powa_stat_checkpointer")
+    val t1 = Timestamp.valueOf("2024-01-01 00:01:00")
+    e.ingest(early, bgwriterAt(srvid, t1, 1))
+    e.ingest(late, checkpointerAt(srvid, t1))
+    // srvid % 20 == 3: tick 1 is a plain tick, tick 2 aggregates
+    assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:01:30")) === 0)
+    // the later aggregate is RUNNING when the earlier one fails (a unit
+    // that has not started is skipped instead), then takes another 1 s
+    val lateRunning = new java.util.concurrent.CountDownLatch(1)
+    e.log = line =>
+      if (line == s"running ${early}_aggregate") {
+        lateRunning.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        throw new AssertionError(s"fatal in ${early}_aggregate")
+      } else if (line == s"running ${late}_aggregate") {
+        lateRunning.countDown()
+        Thread.sleep(1000)
+      }
+    e.store.traceRowcounts = false // the concurrent tail
+    val ex = intercept[AssertionError] {
+      e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:02:30"))
+    }
+    assert(ex.getMessage === s"fatal in ${early}_aggregate")
+    // the sibling's aggregate had committed before the tick returned and
+    // released the server's lock
+    assert(!e.store.hasPartition(late, GenericDatasource.Current, srvid))
+    assert(tierCount(e, late, GenericDatasource.History) === 1)
+    val atReturn = storeListing(e)
+    Thread.sleep(1000)
+    assert(storeListing(e) === atReturn, "nothing writes after the tick returned")
+    // the failed tick persisted no meta, so the next one replays its phase
+    e.clearLog()
+    assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:03:30")) === 0)
+    assert(!e.store.hasPartition(early, GenericDatasource.Current, srvid))
+    assert(tierCount(e, early, GenericDatasource.History) === 1)
   }
 }
