@@ -13,13 +13,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_PARTS decouples shuffle partitions from core count —
-    // the A/B diagnostic for partition-floor questions (state stores,
-    // per-task scheduling on small per-tick frames)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -31,20 +27,11 @@ object Bench {
       .config("spark.sql.constraintPropagation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_READV2=true routes every Store tier read through the
-    // DSv2 table (Store.useV2) — the A/B switch for measuring the
-    // engine round-trips on both read paths.
-    sys.env.get("SPARK_GRAFT_READV2")
-      .foreach(v => spark.conf.set("spark.graft.store.readV2", v))
-    // SPARK_GRAFT_STREAM_PROVIDER=rocksdb|hdfs pins every scoped
-    // stream's state-store provider (StreamTuning.ProviderKey) — the
-    // A/B switch for the streaming state-store floor.
-    sys.env.get("SPARK_GRAFT_STREAM_PROVIDER")
-      .foreach(v => spark.conf.set(
-        graft.streaming.StreamTuning.ProviderKey, v))
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — generic session-conf A/B hook
     // for profiling runs (never set by the driver; the committed bench
-    // numbers use the defaults above).
+    // numbers use the defaults above), e.g.
+    // spark.sql.shuffle.partitions=64;spark.graft.store.readV2=false;
+    // spark.graft.stream.stateStoreProvider=rocksdb
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)

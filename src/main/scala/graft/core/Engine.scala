@@ -563,8 +563,8 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     * aggregate/purge/compact, catalog import, metas) keep the
     * per-server path, so each server's visible end state — tiers,
     * meta row, error log — is IDENTICAL to running [[takeSnapshot]]
-    * per server (EngineSpec pins row-identity; StressR13 measures the
-    * fan-out win).
+    * per server (EngineSpec pins row-identity; SCALE.md "vectorized
+    * fleet tick" records the fan-out win).
     *
     * Semantics preserved per server: the same NOWAIT lock (a server
     * whose lock is held errors with 1, exactly like a sequential

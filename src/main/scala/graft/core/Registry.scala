@@ -141,10 +141,11 @@ final class Registry(persistence: Option[RegistryStore] = None) {
     * fresh meta), but ONE persisted-set refresh and ONE merged
     * servers-table write for the whole batch — onboarding a fleet is
     * O(fleet) bytes instead of the one-at-a-time path's O(fleet²)
-    * (StressR11: 44 s for 1000 registerServer calls; the batch form
-    * is one table write + 1000 text meta rows). Atomic under the
-    * registry lock: a duplicate anywhere in the batch rejects the
-    * WHOLE batch before anything persists. */
+    * (SCALE.md "fleet axis at 1000 servers": 44 s for 1000
+    * registerServer calls; the batch form is one table write + 1000
+    * text meta rows). Atomic under the registry lock: a duplicate
+    * anywhere in the batch rejects the WHOLE batch before anything
+    * persists. */
   def registerServers(cfgs: Seq[ServerConfig]): Seq[Int] = locked {
     persistence.foreach(_.loadServers().foreach { r =>
       if (!servers.contains(r.srvid)) servers(r.srvid) = r.toConfig

@@ -67,7 +67,7 @@ final class RegistryStore(root: String) {
   //       full listings of the shared `_registry` dir (version
   //       allocation + gc), O(fleet) entries each — at 1000 servers an
   //       IDLE scheduler pass spent ~32 s in driver filesystem work
-  //       (StressR11 fleet axis, round 11);
+  //       (SCALE.md "fleet axis at 1000 servers", round 11);
   //   v3 (current): one single-LINE text row at `_registry/metas/<id>`,
   //       replaced by write-temp + atomic rename — no version dirs, no
   //       manifests, no shared-dir listings; ~0.1 ms per write, and the

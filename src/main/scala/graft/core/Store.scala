@@ -81,25 +81,24 @@ final class Store(val spark: SparkSession, val root: String) {
     * every read path keep codegen (their inputs grow with
     * coalesce_seq × tick — q33's constvalues pack measurably WANTS
     * codegen), as does the fleet write (one job for the whole fleet).
-    * `spark.graft.store.tickCodegen=true` restores codegen for the
-    * tick writes. Session-conf scoping shares StreamTuning.scoped's
-    * documented single-threaded-planning assumption. */
+    * Session-conf scoping shares StreamTuning.scoped's documented
+    * single-threaded-planning assumption. */
   private val tickScopeLock = new Object
   private var tickScopeDepth = 0
   private var tickScopePrev: Option[String] = None
   private def tickCodegenScope[T](body: => T): T = {
-    if (spark.conf.get("spark.graft.store.tickCodegen", "false").toBoolean)
-      return body
     val key = "spark.sql.codegen.wholeStage"
     // REENTRANT + multi-thread safe: concurrent same-priority snapshots
     // (Engine's overlapped datasource pass) each enter this scope; only
     // the first-in saves the session value and only the last-out
     // restores it, so an interleaved exit can never capture the scope's
     // own "false" as the value to restore (which would leak
-    // codegen-off into the whole session).
+    // codegen-off into the whole session). The saved value is the
+    // EXPLICIT setting (getAll), not getOption's default fallback, so an
+    // unset key is unset again afterwards.
     tickScopeLock.synchronized {
       if (tickScopeDepth == 0) {
-        tickScopePrev = spark.conf.getOption(key)
+        tickScopePrev = spark.conf.getAll.get(key)
         spark.conf.set(key, "false")
       }
       tickScopeDepth += 1
@@ -129,8 +128,8 @@ final class Store(val spark: SparkSession, val root: String) {
     * bench justified (11 engine round-trips, V2 53.7 s vs V1 56.5 s,
     * per-query within noise both directions; NOTES.md). Set the conf
     * to false to fall back to the union/manifest scan. Read per call,
-    * so a session can flip it mid-run for A/B measurement (Bench
-    * honors SPARK_GRAFT_READV2). */
+    * so a session can flip it mid-run for A/B measurement (Bench sets
+    * it through SPARK_GRAFT_EXTRA_CONF). */
   private def useV2: Boolean =
     spark.conf.get("spark.graft.store.readV2", "true").toBoolean
 

@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * hoisted into a projection it compiled but each split method
   * exceeded the JIT's ~8 KB bytecode threshold, so the "compiled" form
   * ran as JVM-INTERPRETED bytecode — measured 2× slower than Spark's
-  * own interpreted-expression fallback (Scratch A/B, m=8 k=16, 100k
-  * vectors: fused-fallback 4.3 s, hoisted-compiled 9.1 s). The loop
-  * below is a few hundred bytecodes: it JITs, allocates nothing, and
-  * the Lloyd pass drops to scan speed.
+  * own interpreted-expression fallback (SCALE.md "the PQ assignment
+  * argmin": m=8 k=16, 100k vectors: fused-fallback 4.3 s,
+  * hoisted-compiled 9.1 s). The loop below is a few hundred bytecodes:
+  * it JITs, allocates nothing, and the Lloyd pass drops to scan speed.
   *
   * Tie rule: strict `<`, first minimum wins — with centroids ordered
   * by ascending id (every call site sorts), this is exactly the

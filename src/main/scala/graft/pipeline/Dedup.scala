@@ -229,12 +229,12 @@ object Dedup {
 
   /** Exact-Jaccard verification of a candidate (i, j) frame against
     * the hashed-shingle frame — the shared tail of every LSH pair
-    * pipeline (k-family, OPH, index probes) and of the measurement
-    * harness (LshGrid counts a candidate frame and verifies the SAME
-    * frame instead of rebuilding the pipeline). Two doc-keyed joins to
-    * attach shingle sets, a size-ratio pre-filter (guide §2.3 — do the
-    * cheap necessary test first; at 0.8 it skips ~a third of candidate
-    * pairs), then the in-row intersection ratio for the survivors. */
+    * pipeline (k-family, OPH, index probes; SCALE.md "LSH band/row
+    * tuning grid" verified each grid cell's candidate frame through
+    * it). Two doc-keyed joins to attach shingle sets, a size-ratio
+    * pre-filter (guide §2.3 — do the cheap necessary test first; at
+    * 0.8 it skips ~a third of candidate pairs), then the in-row
+    * intersection ratio for the survivors. */
   def verifyJaccardPairs(hsh: DataFrame, cands: DataFrame,
       threshold: Double): DataFrame = {
     val withA = cands.join(
@@ -867,10 +867,10 @@ object Dedup {
       // rounds are shuffle-bound and this is neutral; at the per-batch
       // incremental-fold scale (StreamCc: label frames of 10^3..10^4
       // rows) each round is JOB-SCHEDULING-bound and dropping the job
-      // is a measured win (Scratch p69 A/B, round 12: the 4-trigger
-      // stream 9.8→7.1 s, 4 bare folds 6.6→5.8 s, union fold
-      // 2.5→2.0 s; the remaining floor is the seed/fingerprint/label
-      // jobs per fold — see NOTES r12).
+      // is a measured win (SCALE.md "the p69 streaming-CC floor,
+      // decomposed", round 12: the 4-trigger stream 9.8→7.1 s, 4 bare
+      // folds 6.6→5.8 s, union fold 2.5→2.0 s; the remaining floor is
+      // the seed/fingerprint/label jobs per fold — see NOTES r12).
       val next = smallStar(largeStar(e)).localCheckpoint()
       rounds += 1
       // convergence fast path (r6 VERDICT item 7): in the common
@@ -902,7 +902,7 @@ object Dedup {
     * the new edges banks all prior convergence work: merging stars is
     * depth-≤2 tree flattening, and the round count is O(log merged
     * component size) — independent of how many rounds the original
-    * corpus took (Stress `cc_incr` axis measures it; PropertySpec pins
+    * corpus took (SCALE.md's round-6 axes measure it; PropertySpec pins
     * incremental == batch on random edge splits).
     *
     * `labels` is [[connectedComponents]] output (idCol, cluster, …);
@@ -910,10 +910,7 @@ object Dedup {
     * Returns the same (idCol, cluster, is_keeper) shape over the union
     * of labeled nodes and new endpoints. */
   def ccIncremental(labels: DataFrame, newEdges: DataFrame,
-      idCol: String): DataFrame = ccIncrementalWithRounds(labels, newEdges, idCol)._1
-
-  private[graft] def ccIncrementalWithRounds(labels: DataFrame,
-      newEdges: DataFrame, idCol: String): (DataFrame, Int) = {
+      idCol: String): DataFrame = {
     val prior = labels.select(col(idCol).as("id"), col("cluster").as("lbl"))
     val seed = prior.filter(col("id") =!= col("lbl"))
       .select(col("id").as("i"), col("lbl").as("j"))
@@ -922,9 +919,9 @@ object Dedup {
       .union(newEdges.select(col("i").as("id")))
       .union(newEdges.select(col("j").as("id")))
       .distinct()
-    val (resolved, rounds) = ccStarsWithRounds(seed, nodes, "id")
-    (resolved.select(col("id").as(idCol), col("lbl").as("cluster"),
-      (col("id") === col("lbl")).as("is_keeper")), rounds)
+    ccStarsWithRounds(seed, nodes, "id")._1
+      .select(col("id").as(idCol), col("lbl").as("cluster"),
+        (col("id") === col("lbl")).as("is_keeper"))
   }
 
   /** Near-dup removal end-to-end — the operation a training pipeline

@@ -1241,7 +1241,7 @@ object Similarity {
     * NOTES rule forbids. Double space: a near-equidistant boundary
     * point can land in a different cell than the integer path (which
     * is why the ORACLE queries pin assignCellsInt at small k and this
-    * is the Stress/production path). Tie → lowest centroid id. Zero
+    * is the production path). Tie → lowest centroid id. Zero
     * exchanges, same pass-through contract. */
   def assignCellsDot(embeddings: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
@@ -1626,11 +1626,11 @@ object Similarity {
     // assignment: inside the Generate's consume it overflowed Janino's
     // 64 KB limit (interpreted fallback, round-10 NOTES), and hoisted
     // into a projection it compiled but blew the JIT's ~8 KB bytecode
-    // threshold — measured 2× SLOWER than the fallback (Scratch A/B,
-    // round 11). The compact loop JITs and runs at scan speed; ties
-    // break to the lowest centroid id exactly like the struct rule
-    // (centroids are sorted ascending). PlanSpec pins the
-    // no-codegen-fallback shape.
+    // threshold — measured 2× SLOWER than the fallback (SCALE.md "the
+    // PQ assignment argmin", round 11). The compact loop JITs and runs
+    // at scan speed; ties break to the lowest centroid id exactly like
+    // the struct rule (centroids are sorted ascending). PlanSpec pins
+    // the no-codegen-fallback shape.
     def cellCol(s: Int): Column =
       element_at(typedLit(cents(s).map(_._1)),
         NativeFunctions.argminDist2(sub(s),

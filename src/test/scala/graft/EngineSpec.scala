@@ -44,6 +44,13 @@ class EngineSpec extends AnyFunSuite {
         "sync_time", "buffers_written")
   }
 
+  /** One user-functions sample at `ts`. */
+  private def userFunctionsAt(srvid: Int, ts: Timestamp): DataFrame = {
+    import spark.implicits._
+    Seq((srvid, ts, 100L, 1L, 10L, 5.0, 7.0))
+      .toDF("srvid", "ts", "dbid", "funcid", "calls", "total_time", "self_time")
+  }
+
   private def tierCount(e: Engine, ds: String, tier: String): Long = {
     val spec = Specs.byName(ds)
     if (tier == GenericDatasource.History)
@@ -932,7 +939,7 @@ class EngineSpec extends AnyFunSuite {
     // the fleet-scale claim behind the directory-probe fast path: a
     // tick where nothing is staged costs filesystem probes + one meta
     // write — NO Spark job — so 100 idle servers cost ~100 probes, not
-    // 100 query plans (Stress fleet axis measures the wall-clock side)
+    // 100 query plans (SCALE.md's fleet axes record the wall-clock side)
     val e = mkEngine()
     val srvid = e.registry.registerServer(ServerConfig(
       id = 45, hostname = "h", powaCoalesce = 1000, retentionSec = 86400))
@@ -1696,12 +1703,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("tail passes: failing aggregate, purge and compact steps leave the " +
       "other datasources' steps done, errors as in a width-1 tick") {
-    import spark.implicits._
     val (bgw, ckp, uf) =
       ("powa_stat_bgwriter", "powa_stat_checkpointer", "powa_user_functions")
-    def userFunctionsAt(srvid: Int, ts: Timestamp): DataFrame =
-      Seq((srvid, ts, 100L, 1L, 10L, 5.0, 7.0))
-        .toDF("srvid", "ts", "dbid", "funcid", "calls", "total_time", "self_time")
     // three ticks (coalesce 5, srvid % 20 == 3): a plain, an aggregate and
     // a purge tick; returns the errors and each datasource's (current,
     // history) counts
@@ -1795,5 +1798,49 @@ class EngineSpec extends AnyFunSuite {
     assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:03:30")) === 0)
     assert(!e.store.hasPartition(early, GenericDatasource.Current, srvid))
     assert(tierCount(e, early, GenericDatasource.History) === 1)
+  }
+
+  test("a tick leaves the session's wholeStage codegen conf as it found " +
+      "it, explicitly true or unset, when one snapshot fails") {
+    val key = "spark.sql.codegen.wholeStage"
+    val (bgw, ckp, uf) =
+      ("powa_stat_bgwriter", "powa_stat_checkpointer", "powa_user_functions")
+    // the explicitly set value, None when unset (conf.get reads the default)
+    def explicit(): Option[String] = spark.conf.getAll.get(key)
+    def setTo(v: Option[String]): Unit = v match {
+      case Some(x) => spark.conf.set(key, x)
+      case None => spark.conf.unset(key)
+    }
+    val saved = explicit()
+    try Seq(Some("true"), None).zipWithIndex.foreach { case (start, i) =>
+      setTo(start)
+      val e = mkEngine()
+      val srvid = e.registry.registerServer(ServerConfig(id = 264 + i,
+        hostname = "h", powaCoalesce = 100))
+      assert(Seq(bgw, ckp, uf).map(e.datasource(_).priority).distinct.size === 1)
+      val t1 = Timestamp.valueOf("2024-01-01 00:01:00")
+      e.ingest(bgw, bgwriterAt(srvid, t1, 1))
+      e.ingest(ckp, checkpointerAt(srvid, t1))
+      e.ingest(uf, userFunctionsAt(srvid, t1))
+      assert(explicit() === start, "an ingest append restores the conf")
+      // the failing unit throws only once a sibling's sink write holds
+      // the codegen-off scope, so the failure overlaps the scope
+      val sawScope = new java.util.concurrent.atomic.AtomicBoolean(false)
+      e.log = line =>
+        if (line == s"running ${bgw}_snapshot") {
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (spark.conf.get(key) != "false" && System.nanoTime() < deadline)
+            Thread.sleep(1)
+          sawScope.set(spark.conf.get(key) == "false")
+          throw new IllegalStateException("injected")
+        }
+      e.store.traceRowcounts = false // width 4
+      assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:01:30")) === 1)
+      assert(sawScope.get, "sibling tick writes run with codegen off")
+      assert(explicit() === start)
+      assert(e.registry.meta(srvid).errors === Seq(s"${bgw}_snapshot: injected"))
+      Seq(ckp, uf).foreach(d =>
+        assert(tierCount(e, d, GenericDatasource.Current) === 1))
+    } finally setTo(saved)
   }
 }

@@ -699,9 +699,10 @@ class PlanSpec extends AnyFunSuite {
 
   test("PQ training + probe compile under whole-stage codegen at the " +
       "fleet shape (no Janino 64 KB interpreted fallback)") {
-    // The round-10 Stress run's one codegen overflow: pqCodebook's
-    // Lloyd pass fused all m·k composed dist2 argmins into the
-    // Generate's doConsume, where method splitting is disabled. The
+    // The round-10 scale run's one codegen overflow (SCALE.md "the PQ
+    // assignment argmin"): pqCodebook's Lloyd pass fused all m·k
+    // composed dist2 argmins into the Generate's doConsume, where
+    // method splitting is disabled. The
     // fix collapses each per-subspace assignment into the native
     // graft_argmin_dist2 loop (+ element_at id lookup) — a few
     // hundred bytecodes that JIT, vs the struct-argmax form whose

@@ -479,7 +479,7 @@ class PropertySpec extends AnyFunSuite {
     // in-cell candidate, and the exact re-rank makes the composed
     // result EQUAL brute force — recall 1.0, scores included. This pins
     // the composition plumbing (cell restriction, shortlist, re-rank);
-    // the lossy-budget regime is the Stress axis's job.
+    // SCALE.md's round-6 IVF-PQ axis measured the lossy-budget regime.
     val dim = 16
     val nClusters = 8
     def center(c: Int): Array[Float] =
