@@ -52,8 +52,7 @@ class GenericDatasource(val spec: DatasourceSpec) {
 
   /** Run `commit` over this server's staged rows; returns their count
     * (−1 when tracing is off). ONE cached partition: the frame holds one
-    * server's samples since its last tick (the property
-    * `Store.tickCodegenScope` also rests on), so each sink tier is one
+    * server's samples since its last tick, so each sink tier is one
     * task writing one file per tick, however many files the collector
     * landed. Cached: the sinks are several outputs of one scan (SURVEY.md
     * §7.4 item 6). A staging partition implies staged rows (ingest writes

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, date_format}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed tier storage. Layout (SURVEY.md §7.1):
@@ -26,6 +27,12 @@ import org.apache.spark.sql.types.StructType
   * (AtomicSwap — concurrent readers never observe an absent partition);
   * the aggregate's move of rows from `current` into `history` runs under
   * the commit protocol below (SURVEY.md §7.4 item 2).
+  *
+  * Session conf: the store writes one session setting, the MICROS
+  * timestamp pin at construction. Tick writes turn whole-stage codegen
+  * off on their own thread only (a clone of the session conf as the
+  * thread's `SQLConf.get`, [[tickCodegenScope]]), so queries planned on
+  * other threads of the same session during a tick keep codegen.
   */
 final class Store(val spark: SparkSession, val root: String) {
 
@@ -34,10 +41,13 @@ final class Store(val spark: SparkSession, val root: String) {
   // parquet min/max statistics, which would blind both the manifest's
   // per-file range stats (AtomicSwap.writeManifest — planning-time file
   // skipping) and parquet row-group pruning on range readbacks. The
-  // knob is session-global and conf-only (the per-write option is not
-  // honored by the parquet write support), so it is pinned here, once,
-  // when the store is constructed — the same explicit-side-effect
-  // pattern as Tables.eventsRawSchemaPinNanosConf.
+  // knob is conf-only (the per-write option is not honored by the
+  // parquet write support) and must be a SESSION setting: the parquet
+  // writer reads it from the session's own conf
+  // (ParquetFileFormat.prepareWrite), not from a thread's SQLConf.get,
+  // so it is pinned here, once, when the store is constructed — the
+  // same explicit-side-effect pattern as
+  // Tables.eventsRawSchemaPinNanosConf.
   spark.conf.set("spark.sql.parquet.outputTimestampType",
     "TIMESTAMP_MICROS")
 
@@ -68,7 +78,7 @@ final class Store(val spark: SparkSession, val root: String) {
   def probe[T](ds: String, tier: String, srvid: Int)(body: => T): T =
     labeled(s"store: probe $ds/$tier srvid=$srvid")(body)
 
-  /** Whole-stage codegen scope for the PER-TICK write paths (ingest
+  /** Whole-stage codegen off for the PER-TICK write paths (ingest
     * append + snapshot sinks + dim rewrites). Measured (guide §1):
     * every tick's plans embed that tick's timestamp/batch literals, so
     * the generated source differs per tick and janino recompiles every
@@ -81,36 +91,17 @@ final class Store(val spark: SparkSession, val root: String) {
     * every read path keep codegen (their inputs grow with
     * coalesce_seq × tick — q33's constvalues pack measurably WANTS
     * codegen), as does the fleet write (one job for the whole fleet).
-    * Session-conf scoping shares StreamTuning.scoped's documented
-    * single-threaded-planning assumption. */
-  private val tickScopeLock = new Object
-  private var tickScopeDepth = 0
-  private var tickScopePrev: Option[String] = None
+    *
+    * Thread-confined: `body` plans under a clone of the session's SQL
+    * conf installed as this thread's `SQLConf.get`, which is what
+    * CollapseCodegenStages reads, so the session conf is never written
+    * and queries planned on other threads keep codegen. A thread-local
+    * is not inherited by pool threads, so a caller running units on
+    * [[Parallel.map]] enters the scope inside each unit. */
   private def tickCodegenScope[T](body: => T): T = {
-    val key = "spark.sql.codegen.wholeStage"
-    // REENTRANT + multi-thread safe: concurrent same-priority snapshots
-    // (Engine's overlapped datasource pass) each enter this scope; only
-    // the first-in saves the session value and only the last-out
-    // restores it, so an interleaved exit can never capture the scope's
-    // own "false" as the value to restore (which would leak
-    // codegen-off into the whole session). The saved value is the
-    // EXPLICIT setting (getAll), not getOption's default fallback, so an
-    // unset key is unset again afterwards.
-    tickScopeLock.synchronized {
-      if (tickScopeDepth == 0) {
-        tickScopePrev = spark.conf.getAll.get(key)
-        spark.conf.set(key, "false")
-      }
-      tickScopeDepth += 1
-    }
-    try body
-    finally tickScopeLock.synchronized {
-      tickScopeDepth -= 1
-      if (tickScopeDepth == 0) tickScopePrev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val tickConf = spark.sessionState.conf.clone()
+    tickConf.setConfString("spark.sql.codegen.wholeStage", "false")
+    SQLConf.withExistingConf(tickConf)(body)
   }
 
   private def dir(ds: String, tier: String): Path = Paths.get(root, ds, tier)
@@ -334,14 +325,6 @@ final class Store(val spark: SparkSession, val root: String) {
       .write.mode("append").partitionBy("srvid", "bucket")
       .parquet(dir(ds, tier).toString)
   }
-
-  /** Read a bucketed tier. The bucket is a derived physical column
-    * (date_format of range_start), never part of the logical schema, so
-    * this is a plain tier read: manifest-pinned paths ignore the bucket
-    * directory level entirely and the directory fallback projects the
-    * discovered column away. */
-  def readBucketed(ds: String, tier: String, schema: StructType): DataFrame =
-    read(ds, tier, schema)
 
   /** Month buckets LOGICALLY present for one server: the physical
     * directory listing minus buckets doomed by a deferred drop (their
@@ -744,7 +727,8 @@ final class Store(val spark: SparkSession, val root: String) {
     * sink stage writes (the statements/qualstats dimension rewrites —
     * swap-replaces of their own partitions, re-derived on a
     * rolled-back retry). Sinks and alongside units run CONCURRENTLY
-    * on [[Parallel.map]], width 4: every unit reads the caller-cached
+    * on [[Parallel.map]], width 4, each entering [[tickCodegenScope]]
+    * on its own pool thread: every unit reads the caller-cached
     * staging frame and writes a distinct invisible directory, and the
     * commit marker is created only after all of them return, so a
     * failure anywhere still rolls the tick back exactly as the
@@ -755,17 +739,12 @@ final class Store(val spark: SparkSession, val root: String) {
       sinks: Seq[(String, DataFrame)],
       alongside: Seq[() => Unit] = Nil): Unit = {
     recoverSnapshot(ds, stagingTier, srvid) // resolve any stale run
-    // tick-codegen scope spans every unit: the conf is set once before
-    // the pool starts and restored after every unit has joined, so the
-    // concurrent writers only ever READ it
-    tickCodegenScope {
-      Parallel.map(sinks.map { case (tier, df) => () =>
-        labeled(s"store: snapshot $ds->$tier srvid=$srvid") {
-          df.drop("srvid").write.mode("overwrite")
-            .parquet(snapStageDir(ds, tier, srvid).toString)
-        }
-      } ++ alongside, 4)(_())
-    }
+    Parallel.map(sinks.map { case (tier, df) => () =>
+      labeled(s"store: snapshot $ds->$tier srvid=$srvid") {
+        df.drop("srvid").write.mode("overwrite")
+          .parquet(snapStageDir(ds, tier, srvid).toString)
+      }
+    } ++ alongside, 4)(unit => tickCodegenScope(unit()))
     Files.createDirectory(snapMarker(ds, srvid)) // commit point
     dropPartition(ds, stagingTier, srvid)
     promoteSnapshot(ds, srvid)
@@ -929,9 +908,6 @@ final class Store(val spark: SparkSession, val root: String) {
       (markers ++ staged).distinct
     }
   }
-
-  /** Drop a whole tier (global reset). */
-  def dropTier(ds: String, tier: String): Unit = deleteRecursively(dir(ds, tier))
 
   private def deleteRecursively(p: Path): Unit =
     AtomicSwap.deleteRecursively(p)

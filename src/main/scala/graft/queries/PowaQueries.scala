@@ -1114,7 +1114,7 @@ object PowaQueries {
       val b = new graft.core.Engine(s, root.toString)
       run(b, afterRestart)
       val spec = graft.spec.Specs.byName("powa_stat_bgwriter")
-      val histTs = b.store.readBucketed("powa_stat_bgwriter",
+      val histTs = b.store.read("powa_stat_bgwriter",
           graft.core.GenericDatasource.History,
           graft.core.GenericDatasource.historyNoSrvid(spec))
         .select(explode(col("records.ts")).as("ts"),

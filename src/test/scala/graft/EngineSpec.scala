@@ -54,7 +54,7 @@ class EngineSpec extends AnyFunSuite {
   private def tierCount(e: Engine, ds: String, tier: String): Long = {
     val spec = Specs.byName(ds)
     if (tier == GenericDatasource.History)
-      e.store.readBucketed(ds, tier, GenericDatasource.historyNoSrvid(spec)).count()
+      e.store.read(ds, tier, GenericDatasource.historyNoSrvid(spec)).count()
     else e.store.read(ds, tier, GenericDatasource.currentNoSrvid(spec)).count()
   }
 
@@ -82,7 +82,7 @@ class EngineSpec extends AnyFunSuite {
     assert(tierCount(e, ds, GenericDatasource.History) === 1)
     assert(e.store.listBuckets(ds, GenericDatasource.History, srvid) ===
       Seq("2024-01"))
-    val hist = e.store.readBucketed(ds, GenericDatasource.History,
+    val hist = e.store.read(ds, GenericDatasource.History,
       GenericDatasource.historyNoSrvid(Specs.byName(ds)))
     val row = hist.select(size(col("records")), col("range_start"), col("range_end")).head()
     assert(row.getInt(0) === 5)
@@ -632,7 +632,7 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(tierCount(b, "powa_stat_bgwriter", GenericDatasource.Current) === 0)
     assert(tierCount(b, "powa_stat_bgwriter", GenericDatasource.History) === 1)
-    val hist = b.store.readBucketed("powa_stat_bgwriter",
+    val hist = b.store.read("powa_stat_bgwriter",
       GenericDatasource.History,
       GenericDatasource.historyNoSrvid(Specs.byName("powa_stat_bgwriter")))
     assert(hist.select(size(col("records"))).head().getInt(0) === 5)
@@ -847,7 +847,7 @@ class EngineSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(committed))
     assert(tierCount(e, ds, GenericDatasource.Current) === 0)
     assert(tierCount(e, ds, GenericDatasource.History) === 1)
-    val packed = e.store.readBucketed(ds, GenericDatasource.History,
+    val packed = e.store.read(ds, GenericDatasource.History,
       GenericDatasource.historyNoSrvid(d.spec))
     assert(packed.select(size(col("records"))).head().getInt(0) === 3)
     // recovery is idempotent — a second pass changes nothing
@@ -1048,7 +1048,7 @@ class EngineSpec extends AnyFunSuite {
     // engine vN+1: the same datasource grew one nullable counter
     val v2 = v1.copy(counterCols = v1.counterCols :+ Specs.big("buffers_evo"))
     val dsV2 = new GenericDatasource(v2)
-    val hist = store.readBucketed(v1.name, History, historyNoSrvid(v2))
+    val hist = store.read(v1.name, History, historyNoSrvid(v2))
     val recs = hist.select(explode(col("records")).as("r"))
       .select(col("r.buffers_clean"), col("r.buffers_evo"))
     assert(recs.count() === 5)
@@ -1062,7 +1062,7 @@ class EngineSpec extends AnyFunSuite {
     val cur = store.readPartition(v2.name, Current, srvid,
       currentNoSrvid(v2))
     val rb = graft.operators.Readback.series(cur,
-      store.readBucketed(v2.name, History, historyNoSrvid(v2)), v2,
+      store.read(v2.name, History, historyNoSrvid(v2)), v2,
       lit(Timestamp.valueOf("2024-01-01 00:00:00")),
       lit(Timestamp.valueOf("2024-01-01 01:00:00")))
     assert(rb.count() === 6, "both generations must read back together")
@@ -1070,7 +1070,7 @@ class EngineSpec extends AnyFunSuite {
     assert(rb.filter(col("record.buffers_evo").isNull).count() === 5)
     // and the v2 aggregate commits over the widened current tier
     dsV2.aggregate(store, srvid)
-    val h2 = store.readBucketed(v2.name, History, historyNoSrvid(v2))
+    val h2 = store.read(v2.name, History, historyNoSrvid(v2))
     assert(h2.select(explode(col("records"))).count() === 6)
   }
 
@@ -1104,7 +1104,7 @@ class EngineSpec extends AnyFunSuite {
     // all three generations read back together under the v3 spec
     val rb = graft.operators.Readback.series(
       store.readPartition(v3.name, Current, srvid, currentNoSrvid(v3)),
-      store.readBucketed(v3.name, History, historyNoSrvid(v3)), v3,
+      store.read(v3.name, History, historyNoSrvid(v3)), v3,
       lit(Timestamp.valueOf("2024-01-01 00:00:00")),
       lit(Timestamp.valueOf("2024-01-01 01:00:00")))
     assert(rb.count() === 5, "v1+v2+v3 generations must union")
@@ -1118,7 +1118,7 @@ class EngineSpec extends AnyFunSuite {
       col("record.evo_b") === 50L).count() === 1)
     // and the v3 aggregate commits over the mixed-generation store
     ds3.aggregate(store, srvid)
-    assert(store.readBucketed(v3.name, History, historyNoSrvid(v3))
+    assert(store.read(v3.name, History, historyNoSrvid(v3))
       .select(explode(col("records"))).count() === 5)
     // INCOMPATIBLE change (the unsupported class): redefining an
     // existing counter's type must fail LOUDLY at read — a silent
@@ -1130,7 +1130,7 @@ class EngineSpec extends AnyFunSuite {
         c.copy(dt = org.apache.spark.sql.types.StringType)
       else c))
     val e = intercept[Throwable] {
-      store.readBucketed(bad.name, History, historyNoSrvid(bad))
+      store.read(bad.name, History, historyNoSrvid(bad))
         .select(explode(col("records")).as("r"))
         .select(col("r.buffers_clean")).collect()
     }
@@ -1800,20 +1800,88 @@ class EngineSpec extends AnyFunSuite {
     assert(tierCount(e, early, GenericDatasource.History) === 1)
   }
 
-  test("a tick leaves the session's wholeStage codegen conf as it found " +
-      "it, explicitly true or unset, when one snapshot fails") {
-    val key = "spark.sql.codegen.wholeStage"
-    val (bgw, ckp, uf) =
-      ("powa_stat_bgwriter", "powa_stat_checkpointer", "powa_user_functions")
-    // the explicitly set value, None when unset (conf.get reads the default)
-    def explicit(): Option[String] = spark.conf.getAll.get(key)
+  private val wholeStage = "spark.sql.codegen.wholeStage"
+
+  /** The explicitly set wholeStage value, None when unset (conf.get
+    * reads the default). */
+  private def wholeStageSetting(): Option[String] =
+    spark.conf.getAll.get(wholeStage)
+
+  /** Run `body` with wholeStage explicitly true, then unset (its index
+    * 0, 1 passed along), and restore the caller's setting after. */
+  private def forEachWholeStageStart(body: (Option[String], Int) => Unit): Unit = {
     def setTo(v: Option[String]): Unit = v match {
-      case Some(x) => spark.conf.set(key, x)
-      case None => spark.conf.unset(key)
+      case Some(x) => spark.conf.set(wholeStage, x)
+      case None => spark.conf.unset(wholeStage)
     }
-    val saved = explicit()
+    val saved = wholeStageSetting()
     try Seq(Some("true"), None).zipWithIndex.foreach { case (start, i) =>
       setTo(start)
+      body(start, i)
+    } finally setTo(saved)
+  }
+
+  test("a snapshot commit unit plans with codegen off on its own thread " +
+      "only; the session conf and other threads keep the caller's setting") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // whole-stage codegen stages in the final plan of a small aggregate
+    // planned and run on the calling thread
+    object plans extends AdaptiveSparkPlanHelper
+    def codegenStages(): Int = {
+      val df = spark.range(0, 100).groupBy((col("id") % 3).as("k")).count()
+      df.collect()
+      plans.collect(df.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec => w
+      }.size
+    }
+    forEachWholeStageStart { (start, _) =>
+      val store = new Store(spark,
+        java.nio.file.Files.createTempDirectory("graft_codegen_scope").toString)
+      val (ds, srvid) = ("codegen_scope", 1)
+      val batch = spark.range(0, 3).toDF("v").withColumn("srvid", lit(srvid))
+      store.append(ds, "staging", batch)
+      val seen = new java.util.concurrent.atomic.AtomicReference(
+        (Option.empty[String], -1, -1))
+      store.snapshotCommit(ds, "staging", srvid, Seq("current" -> batch),
+        alongside = Seq { () =>
+          val other = new java.util.concurrent.atomic.AtomicInteger(-1)
+          val t = new Thread(() => other.set(codegenStages()))
+          t.start()
+          t.join()
+          seen.set((wholeStageSetting(), other.get, codegenStages()))
+        })
+      val (conf, otherThread, unitThread) = seen.get
+      assert(conf === start, "the session conf keeps the caller's setting")
+      assert(otherThread > 0, "a thread started in the unit keeps codegen")
+      assert(unitThread === 0, "the unit's own thread plans with codegen off")
+      assert(wholeStageSetting() === start)
+      assert(store.read(ds, "current", batch.schema).count() === 3)
+    }
+  }
+
+  test("a tick leaves the session's wholeStage codegen conf as it found " +
+      "it, explicitly true or unset, when one snapshot fails") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.internal.SQLConf
+    val (bgw, ckp, uf) =
+      ("powa_stat_bgwriter", "powa_stat_checkpointer", "powa_user_functions")
+    // the session conf and the thread's codegen switch, as the first
+    // sibling sink write to be optimized sees them: the optimizer runs on
+    // the writer's thread, inside the write, under its job label
+    val inFlight = new java.util.concurrent.atomic.AtomicReference[
+      (Option[String], Boolean)]
+    val probe = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val label = spark.sparkContext.getLocalProperty("spark.job.description")
+        if (label != null && label.startsWith("store: snapshot "))
+          inFlight.compareAndSet(null,
+            (wholeStageSetting(), SQLConf.get.wholeStageEnabled))
+        plan
+      }
+    }
+    forEachWholeStageStart { (start, i) =>
       val e = mkEngine()
       val srvid = e.registry.registerServer(ServerConfig(id = 264 + i,
         hostname = "h", powaCoalesce = 100))
@@ -1822,25 +1890,28 @@ class EngineSpec extends AnyFunSuite {
       e.ingest(bgw, bgwriterAt(srvid, t1, 1))
       e.ingest(ckp, checkpointerAt(srvid, t1))
       e.ingest(uf, userFunctionsAt(srvid, t1))
-      assert(explicit() === start, "an ingest append restores the conf")
-      // the failing unit throws only once a sibling's sink write holds
-      // the codegen-off scope, so the failure overlaps the scope
-      val sawScope = new java.util.concurrent.atomic.AtomicBoolean(false)
+      assert(wholeStageSetting() === start, "an ingest append leaves the conf")
+      // the failing unit throws only once a sibling's sink write is in
+      // flight, so the failure overlaps the sibling's tick write
+      inFlight.set(null)
+      spark.experimental.extraOptimizations = Seq(probe)
       e.log = line =>
         if (line == s"running ${bgw}_snapshot") {
           val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-          while (spark.conf.get(key) != "false" && System.nanoTime() < deadline)
+          while (inFlight.get == null && System.nanoTime() < deadline)
             Thread.sleep(1)
-          sawScope.set(spark.conf.get(key) == "false")
           throw new IllegalStateException("injected")
         }
       e.store.traceRowcounts = false // width 4
-      assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:01:30")) === 1)
-      assert(sawScope.get, "sibling tick writes run with codegen off")
-      assert(explicit() === start)
+      try assert(e.takeSnapshot(srvid, Timestamp.valueOf("2024-01-01 00:01:30")) === 1)
+      finally spark.experimental.extraOptimizations = Nil
+      assert(inFlight.get === (start, false),
+        "the session conf reads the caller's setting while a sibling's " +
+          "sink write is in flight, and that write plans with codegen off")
+      assert(wholeStageSetting() === start)
       assert(e.registry.meta(srvid).errors === Seq(s"${bgw}_snapshot: injected"))
       Seq(ckp, uf).foreach(d =>
         assert(tierCount(e, d, GenericDatasource.Current) === 1))
-    } finally setTo(saved)
+    }
   }
 }

@@ -52,7 +52,7 @@ class IntegrationSpec extends AnyFunSuite {
     }
 
     def histCount(srvid: Int, ds: String): Long =
-      e.store.readBucketed(ds, GenericDatasource.History,
+      e.store.read(ds, GenericDatasource.History,
           GenericDatasource.historyNoSrvid(Specs.byName(ds)))
         .filter(col("srvid") === srvid).count()
     def curCount(srvid: Int, ds: String): Long =
@@ -68,7 +68,7 @@ class IntegrationSpec extends AnyFunSuite {
     // aggregates in lockstep (powa--5.2.0.sql:3550)
     assert(histCount(b, "powa_stat_bgwriter") === 1)
     assert(curCount(b, "powa_stat_bgwriter") === 3)
-    val bHist = e.store.readBucketed("powa_stat_bgwriter",
+    val bHist = e.store.read("powa_stat_bgwriter",
         GenericDatasource.History,
         GenericDatasource.historyNoSrvid(Specs.byName("powa_stat_bgwriter")))
       .filter(col("srvid") === b)

@@ -44,7 +44,7 @@ class StreamIngestSpec extends AnyFunSuite {
 
     // 5 micro-batches → aggregate fired on the 5th: history=1, current=0
     val ds = "powa_stat_bgwriter"
-    val hist = engine.store.readBucketed(ds, GenericDatasource.History,
+    val hist = engine.store.read(ds, GenericDatasource.History,
       GenericDatasource.historyNoSrvid(Specs.byName(ds)))
     assert(hist.count() === 1)
     assert(hist.select(size(col("records"))).head().getInt(0) === 5)
