@@ -100,8 +100,8 @@ class GenericDatasource(val spec: DatasourceSpec) {
     * marker → drain → promote per srvid over filesystem ops only.
     *
     * Only the base generic transform is safe to vectorize: subclasses
-    * with snapshot-time dimension work (statements MRU touch, qualstats
-    * quals insert, databases diff-sync) override [[snapshot]], so they
+    * with snapshot-time dimension work (the statements and qualstats
+    * dimension logs, databases diff-sync) override [[snapshot]], so they
     * fall back to the per-server path automatically (the `getClass`
     * guard — a subclass that overrides snapshot but not this method
     * must never silently get the generic transform).

@@ -11,8 +11,8 @@ import java.util.concurrent.atomic.AtomicBoolean
   * snapshots and its cadence tail's per-datasource aggregate or
   * purge + compact units (both at `Engine.datasourceWidth`, 4; each unit
   * writes only its own `<root>/<ds>/` tree), a
-  * snapshot commit's pre-marker sink and dimension writes (width 4; each
-  * writes its own invisible directory), and the fleet commit's
+  * snapshot commit's pre-marker sink writes (width 4; each writes its
+  * own invisible directory), and the fleet commit's
   * per-server marker → drain → promote (width `min(32, cores)`; every
   * path is srvid-scoped).
   *

@@ -15,9 +15,11 @@ import graft.spec.Specs
   *
   * Snapshot maintains two extra structures besides the generic metric
   * records (:7104-7207):
-  *   - the quals dimension (`powa_qualstats_quals`, :3139-3147):
-  *     missing (srvid, qualid, queryid, dbid, userid, quals[]) rows are
-  *     inserted (anti-join, `array_agg(DISTINCT …)` — :7126-7143);
+  *   - the quals dimension (`powa_qualstats_quals`, :3139-3147), an
+  *     append-only log ([[DimLog]]): each tick appends its staged
+  *     (qualid, queryid, dbid, userid, quals[]) rows, and the fold keeps
+  *     each key's quals from its first appearance — the anti-join insert
+  *     of missing quals (:7126-7143) — and runs at the aggregate;
   *   - per-qual constvalues rows (`powa_qualstats_constvalues_history_
   *     current`, :3160-3178) — kept in a `constvalues` tier, the input
   *     to the top-K ranking operator (TopK.multiTopK).
@@ -42,8 +44,11 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
     StructField("dbid", LongType), StructField("userid", LongType),
     StructField("quals", qualStruct)))
 
-  def readDim(store: Store, srvid: Int): DataFrame =
-    store.readPartition(name, Dim, srvid, dimSchema).drop("srvid")
+  val dimLog = new DimLog(name, dimSchema,
+    Seq("qualid", "queryid", "dbid", "userid"), first = Seq("quals"),
+    last = Nil)
+
+  def readDim(store: Store, srvid: Int): DataFrame = dimLog.read(store, srvid)
 
   override protected def recoverPending(store: Store, srvid: Int): Unit = {
     super.recoverPending(store, srvid)
@@ -54,24 +59,9 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
       now: java.sql.Timestamp): Long = {
     recoverPending(store, srvid)
     withStaged(store, srvid, stagingFull) { staged =>
-      val idKeys = Seq("qualid", "queryid", "dbid", "userid")
-      // missing quals → dimension insert (:7126-7143). Unlike the
-      // statements dim there is no MRU touch here, so a tick that
-      // brings no new qual shapes (the steady state — dims stabilize
-      // fast) skips the dimension rewrite entirely.
-      val dim = readDim(store, srvid)
-      val missing = staged.select(
-          col("qualid"), col("queryid"), col("dbid"), col("userid"),
-          col("quals"))
-        .join(dim, idKeys, "left_anti")
-        .dropDuplicates(idKeys)
-
-      // per-qual metric records + constvalues rows land atomically
-      // with the staging drain (Store snapshot commit protocol); the
-      // dim insert rides `alongside` — outside the marker, re-derived
-      // on retry, complete before the drain — so its isEmpty probe
-      // and (rare) rewrite overlap the sink stage writes instead of
-      // serializing ahead of them
+      // per-qual metric records, constvalues rows and the quals log's
+      // batch land atomically with the staging drain (Store snapshot
+      // commit protocol)
       store.snapshotCommit(name, Staging, srvid, Seq(
         Current -> staged.select(
           col("srvid") +: spec.keyNames.map(col) :+
@@ -81,11 +71,9 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
           col("srvid"), col("qualid"), col("queryid"), col("dbid"),
           col("userid"), col("ts"), col("constvalues"),
           col("occurences"), col("execution_count"), col("nbfiltered"),
-          col("mean_err_estimate_ratio"), col("mean_err_estimate_num"))),
-        alongside = Seq(() =>
-          if (store.probe(name, Dim, srvid)(!missing.isEmpty))
-            store.overwritePartition(name, Dim, srvid,
-              dim.unionByName(missing).withColumn("srvid", lit(srvid)))))
+          col("mean_err_estimate_ratio"), col("mean_err_estimate_num")),
+        dimLog.sink(store, srvid, staged.select(col("srvid"), col("qualid"),
+          col("queryid"), col("dbid"), col("userid"), col("quals")))))
     }
   }
 
@@ -170,7 +158,8 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
   /** `powa_qualstats_aggregate` (powa--5.2.0.sql:7191-7228): the generic
     * current→history coalesce (quals_history) PLUS the constvalues
     * packing into its own month-bucketed history tier, then both current
-    * tiers drain. */
+    * tiers drain; the quals log folds into one file on the same
+    * cadence. */
   override def aggregate(store: Store, srvid: Int): Unit = {
     super.aggregate(store, srvid)
     if (store.hasPartition(name, Constvalues, srvid)) { // dir => rows
@@ -179,6 +168,7 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
       store.aggregateCommit(name, Constvalues, ConstvaluesHistory,
         srvid, aggregateConstvalues(cv))
     }
+    dimLog.compact(store, srvid)
   }
 
   override def recover(store: Store): Unit = {

@@ -10,8 +10,10 @@ import graft.spec.Specs
   * staging rows carry the statement text (src_tmp layout,
   * powa--5.2.0.sql:1980-2022) and the snapshot maintains the
   * `powa_statements` MRU dimension besides the two record sinks
-  * (:4006-4108). Aggregate/purge/reset stay generic; reset also clears
-  * the dimension partition.
+  * (:4006-4108). The dimension is an append-only log ([[DimLog]]):
+  * each tick appends its seen rows as a third sink, the aggregate folds
+  * the log back into one file, and the purge folds and filters it.
+  * Reset also clears the dimension partition (generic reset).
   */
 final class StatementsDatasource extends GenericDatasource(Specs.statements) {
   import GenericDatasource._
@@ -25,26 +27,29 @@ final class StatementsDatasource extends GenericDatasource(Specs.statements) {
     StructField("userid", LongType), StructField("query", StringType),
     StructField("last_present_ts", TimestampType)))
 
-  def readDim(store: Store, srvid: Int): DataFrame =
-    store.readPartition(name, Dim, srvid, dimSchema).drop("srvid")
+  /** `query` is the `min` of the key's first tick (the anti-join insert,
+    * :4032-4044), `last_present_ts` the stamp of its last (the MRU
+    * update, :4025-4031). */
+  val dimLog = new DimLog(name, dimSchema, StatementsPipeline.identityKeys,
+    first = Seq("query"), last = Seq("last_present_ts"))
+
+  def readDim(store: Store, srvid: Int): DataFrame = dimLog.read(store, srvid)
 
   override def snapshot(store: Store, srvid: Int,
       now: java.sql.Timestamp): Long = {
     recoverPending(store, srvid)
     withStaged(store, srvid, stagingWithQuery) { staged =>
-      val (newDim, sinks) = StatementsPipeline.snapshot(
-        readDim(store, srvid), staged, srvid, lit(now))
-      // dim overwrite stays OUTSIDE the commit marker (Store's
-      // snapshot-commit scaladoc: re-derived on a rolled-back retry,
-      // reference-equivalent); it must complete BEFORE the drain —
-      // its plan reads the staging partition — which `alongside`
-      // guarantees (every unit joins before the marker), while
-      // letting its planning overlap the sink stage writes
-      store.snapshotCommit(name, Staging, srvid, sinks,
-        alongside = Seq(() =>
-          store.overwritePartition(name, Dim, srvid,
-            newDim.withColumn("srvid", lit(srvid)))))
+      val (dimRows, sinks) = StatementsPipeline.snapshot(staged, srvid, lit(now))
+      store.snapshotCommit(name, Staging, srvid,
+        sinks :+ dimLog.sink(store, srvid, dimRows))
     }
+  }
+
+  /** The generic aggregate, then the dimension log folds into one file
+    * on the same cadence. */
+  override def aggregate(store: Store, srvid: Int): Unit = {
+    super.aggregate(store, srvid)
+    dimLog.compact(store, srvid)
   }
 
   /** `powa_statements_purge` (powa--5.2.0.sql:5850-5905): the generic
@@ -59,11 +64,6 @@ final class StatementsDatasource extends GenericDatasource(Specs.statements) {
   override def purge(store: Store, srvid: Int,
       cutoff: java.sql.Timestamp): Unit = {
     super.purge(store, srvid, cutoff)
-    if (store.hasPartition(name, Dim, srvid)) {
-      val dim = readDim(store, srvid)
-      store.overwritePartition(name, Dim, srvid,
-        dim.filter(col("last_present_ts") >= lit(cutoff))
-          .withColumn("srvid", lit(srvid)))
-    }
+    dimLog.rewrite(store, srvid, col("last_present_ts") >= lit(cutoff))
   }
 }

@@ -2,12 +2,11 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.DiffSync
 import graft.spec.Specs
 
 /** The statements snapshot chain — the reference's single multi-CTE DML
   * (`powa_statements_snapshot`, powa--5.2.0.sql:4006-4108), decomposed
-  * into the equivalent DataFrame pipeline with two sinks:
+  * into the equivalent DataFrame pipeline:
   *
   *   capture        := normalized source rows (StatementsSource.capture
   *                     or remote staging)
@@ -18,49 +17,31 @@ import graft.spec.Specs
   *   by_query       := per-entity record append into current (:4046-4068)
   *   by_database    := per-db rollup append into current_db (:4070-4094)
   *
-  * The capture frame is cached — two sinks from one scan (SURVEY.md §7.4
-  * item 6). The query-text dimension is tiny relative to facts, so its
-  * rewrite broadcasts; at cluster scale it becomes a Delta MERGE.
+  * `mru` and `missing_stmts` together are one append of the seen rows to
+  * the query-text dimension's log, stamped `now()`; the log's fold
+  * ([[StatementsDatasource.dimLog]]) keeps, per key, the `min(query)` of
+  * its first tick and the `last_present_ts` of its last. The capture
+  * frame is cached — three outputs from one scan (SURVEY.md §7.4 item 6).
   */
 object StatementsPipeline {
 
   val identityKeys = Seq("queryid", "dbid", "userid")
 
-  /** Maintain the query-text dimension `powa_statements` (srvid, queryid,
-    * dbid, userid, query, last_present_ts — powa--5.2.0.sql:930-948):
-    * MRU-touch rows seen in this capture, insert newly-seen statements
-    * with `min(query)` as the canonical text. Returns the new dimension.
-    */
-  def syncDimension(
-      dim: DataFrame, capture: DataFrame, ts: Column): DataFrame = {
-    val touched = DiffSync.mruTouch(dim, capture, identityKeys,
-      "last_present_ts", ts)
-    val missing = DiffSync.missing(capture, dim, identityKeys)
-      .groupBy(identityKeys.map(col): _*)
-      .agg(min(col("query")).as("query"))
-      .withColumn("last_present_ts", ts)
-      .select(touched.columns.map(col): _*)
-    touched.unionByName(missing)
-  }
-
-  /** Build the full chain's outputs for one server: the updated
-    * dimension (caller persists it — dimension storage is a
-    * read-modify-overwrite of a small table, SURVEY.md §7.4 item 1) and
-    * the two sink frames, which the caller lands atomically with
+  /** Build the chain's outputs for one server: the dimension log rows
+    * (srvid, queryid, dbid, userid, query, last_present_ts — one per
+    * captured row, a plain projection, no shuffle) and the two record
+    * sinks. The caller lands all of them atomically with
     * `Store.snapshotCommit` (appends + staging drain under one commit
     * point). `capture` should be cached by the caller — every returned
     * frame reads it. */
   def snapshot(
-      dim: DataFrame,
       capture: DataFrame,
       srvid: Int,
       ts: Column): (DataFrame, Seq[(String, DataFrame)]) = {
     val spec = Specs.statements
-    // no materialization needed before the dim rewrite: the store's
-    // overwrite writes a NEW version directory and only then flips the
-    // pointer (AtomicSwap), so this plan reads the still-live old
-    // version during its own write action
-    val newDim = syncDimension(dim, capture, ts)
+    // mru + missing_stmts (:4025-4044): the dimension log's batch
+    val dimRows = capture.select(lit(srvid).as("srvid") +:
+      identityKeys.map(col) :+ col("query") :+ ts.as("last_present_ts"): _*)
 
     // by_query: per-entity records into current (:4046-4068)
     val keyCols = spec.keyNames.map(col)
@@ -77,7 +58,7 @@ object StatementsPipeline {
         lit(srvid).as("srvid"), col("dbid"),
         struct(col("ts") +: spec.aggFields.map(f => col(f.name)): _*)
           .as("record"))
-    (newDim, Seq(GenericDatasource.Current -> cur,
+    (dimRows, Seq(GenericDatasource.Current -> cur,
       GenericDatasource.CurrentDb -> curDb))
   }
 }

@@ -72,14 +72,9 @@ final class Store(val spark: SparkSession, val root: String) {
     finally sc.setLocalProperty("spark.job.description", prev)
   }
 
-  /** Label a caller's read action on one server's tier partition (the
-    * check deciding whether a dimension is rewritten) `store: probe`, so
-    * every job a tick launches is attributed to a store op. */
-  def probe[T](ds: String, tier: String, srvid: Int)(body: => T): T =
-    labeled(s"store: probe $ds/$tier srvid=$srvid")(body)
-
   /** Whole-stage codegen off for the PER-TICK write paths (ingest
-    * append + snapshot sinks + dim rewrites). Measured (guide §1):
+    * append + snapshot sinks, the dimension logs' appends among them).
+    * Measured (guide §1):
     * every tick's plans embed that tick's timestamp/batch literals, so
     * the generated source differs per tick and janino recompiles every
     * stage on every tick — q34's 35-counter statements plans paid
@@ -87,10 +82,14 @@ final class Store(val spark: SparkSession, val root: String) {
     * off). The trade is scale-INdependent for this path: a per-server
     * tick frame is small by cadence construction (one tick's staged
     * samples), so interpreted execution costs O(tick rows) while the
-    * compile cost recurs per tick forever. Aggregate/purge/compact and
-    * every read path keep codegen (their inputs grow with
-    * coalesce_seq × tick — q33's constvalues pack measurably WANTS
+    * compile cost recurs per tick forever. Aggregate/purge/compact of
+    * the fact tiers and every read path keep codegen (their inputs grow
+    * with coalesce_seq × tick — q33's constvalues pack measurably WANTS
     * codegen), as does the fleet write (one job for the whole fleet).
+    * The dimension log folds ([[DimLog]]) run in the scope too: a fold
+    * reads one server's dimension, small by construction (its keys ×
+    * the ticks since the last fold), and the purge's fold embeds that
+    * tick's cutoff.
     *
     * Thread-confined: `body` plans under a clone of the session's SQL
     * conf installed as this thread's `SQLConf.get`, which is what
@@ -98,7 +97,7 @@ final class Store(val spark: SparkSession, val root: String) {
     * and queries planned on other threads keep codegen. A thread-local
     * is not inherited by pool threads, so a caller running units on
     * [[Parallel.map]] enters the scope inside each unit. */
-  private def tickCodegenScope[T](body: => T): T = {
+  private[core] def tickCodegenScope[T](body: => T): T = {
     val tickConf = spark.sessionState.conf.clone()
     tickConf.setConfString("spark.sql.codegen.wholeStage", "false")
     SQLConf.withExistingConf(tickConf)(body)
@@ -269,9 +268,9 @@ final class Store(val spark: SparkSession, val root: String) {
     * crash mid-append can never leave a stale manifest behind (the
     * failure mode is then a manifest-less directory fallback, which is
     * always complete — round-5 ADVICE); with the manifest gone,
-    * readPartition falls back to the directory listing. Swap-only
-    * tiers (the dimensions) are never appended, so their manifests
-    * persist. */
+    * readPartition falls back to the directory listing. Tiers that only
+    * swaps and snapshot commits write (the dimensions among them) are
+    * never appended here, so their manifests persist. */
   def append(ds: String, tier: String, df: DataFrame): Unit = {
     invalidateManifests(ds, tier)
     labeled(s"store: append $ds/$tier") {
@@ -703,13 +702,12 @@ final class Store(val spark: SparkSession, val root: String) {
   // rerun at a later now()"); PRESENT → roll forward (drop staging,
   // promote what remains, delete the marker). Promotion is idempotent:
   // each stage dir moves at most once and republish is a pure re-walk.
-  // Dimension overwrites (statements MRU, qualstats quals) stay OUTSIDE
-  // the marker: they are swap-replaces re-derived from dim ∪ staged on
-  // retry, so a rolled-back tick merely re-stamps them at the retry's
-  // now() — exactly what rerunning the reference's transaction does. A
-  // dim updated by a tick that then rolled back is visible early; a
-  // dimension row without matching records is harmless (readback joins
-  // dim TO records, never the reverse).
+  // The statements and qualstats dimensions are append-only logs
+  // (DimLog) whose per-tick batch is one more sink, INSIDE the marker:
+  // a rolled-back tick leaves no dimension row, and its retry stamps
+  // the retry's own now() — exactly what rerunning the reference's
+  // transaction (MRU update and quals insert included,
+  // powa--5.2.0.sql:4025-4044, :7126-7143) does.
 
   private def snapStageDir(ds: String, tier: String, srvid: Int): Path =
     dir(ds, tier).resolve(s".snapstage_srvid=$srvid")
@@ -718,38 +716,47 @@ final class Store(val spark: SparkSession, val root: String) {
 
   /** Atomically land a snapshot's sink batches and drain its staging
     * partition — the tick's second transaction boundary. Each (tier,
-    * df) in `sinks` is appended to that tier's `srvid` partition;
-    * either ALL of them land and staging drains, or none do. The
-    * caller holds the server's snapshot lock.
+    * df) in `sinks` is appended to that tier's `srvid` partition (a
+    * dimension log's batch is one of them); either ALL of them land and
+    * staging drains, or none do. The caller holds the server's snapshot
+    * lock.
     *
-    * `alongside` carries the caller's OUTSIDE-the-marker writes that
-    * must complete before the commit point but are independent of the
-    * sink stage writes (the statements/qualstats dimension rewrites —
-    * swap-replaces of their own partitions, re-derived on a
-    * rolled-back retry). Sinks and alongside units run CONCURRENTLY
-    * on [[Parallel.map]], width 4, each entering [[tickCodegenScope]]
-    * on its own pool thread: every unit reads the caller-cached
-    * staging frame and writes a distinct invisible directory, and the
-    * commit marker is created only after all of them return, so a
-    * failure anywhere still rolls the tick back exactly as the
-    * sequential form did (stage dirs are swept by the next
-    * recoverSnapshot; a completed dim rewrite is the already-documented
-    * visible-early case). */
+    * The sink writes run CONCURRENTLY on [[Parallel.map]], width 4,
+    * each entering [[tickCodegenScope]] on its own pool thread: every
+    * write reads the caller-cached staging frame and writes a distinct
+    * invisible stage directory, and the commit marker is created only
+    * after all of them return, so a failure anywhere rolls the tick
+    * back exactly as the sequential form did (stage dirs are swept by
+    * the next recoverSnapshot). */
   def snapshotCommit(ds: String, stagingTier: String, srvid: Int,
-      sinks: Seq[(String, DataFrame)],
-      alongside: Seq[() => Unit] = Nil): Unit = {
+      sinks: Seq[(String, DataFrame)]): Unit = {
     recoverSnapshot(ds, stagingTier, srvid) // resolve any stale run
-    Parallel.map(sinks.map { case (tier, df) => () =>
+    Parallel.map(sinks, 4) { case (tier, df) =>
       labeled(s"store: snapshot $ds->$tier srvid=$srvid") {
-        df.drop("srvid").write.mode("overwrite")
-          .parquet(snapStageDir(ds, tier, srvid).toString)
+        tickCodegenScope {
+          df.drop("srvid").write.mode("overwrite")
+            .parquet(snapStageDir(ds, tier, srvid).toString)
+        }
       }
-    } ++ alongside, 4)(unit => tickCodegenScope(unit()))
+    }
     Files.createDirectory(snapMarker(ds, srvid)) // commit point
     dropPartition(ds, stagingTier, srvid)
     promoteSnapshot(ds, srvid)
     Files.deleteIfExists(snapMarker(ds, srvid))
   }
+
+  /** Snapshot batches promoted into the live version of one server's
+    * tier partition since a swap last rewrote it — a directory listing,
+    * no Spark job. [[DimLog]] orders its batches by this count. */
+  def batchCount(ds: String, tier: String, srvid: Int): Int =
+    AtomicSwap.liveTarget(dir(ds, tier), s"srvid=$srvid") match {
+      case Some(v) =>
+        val s = Files.list(v)
+        try s.iterator().asScala
+          .count(_.getFileName.toString.startsWith(".batch_"))
+        finally s.close()
+      case None => 0
+    }
 
   /** Tiers holding an unpromoted snapshot stage dir for this server. */
   private def snapStageTiers(ds: String, srvid: Int): Seq[String] = {

@@ -26,11 +26,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (powa--5.2.0.sql's tables are the UI's direct query surface).
   *
   * Schema resolution prefers the spec registry (exact struct schemas
-  * for the generic tier names); tiers of unknown datasources fall back
-  * to parquet-footer inference, so ad-hoc stores (q44's `evt`) resolve
-  * too. DDL is out of scope by design: tables are created by the
-  * engine's commit protocols, not SQL DDL — create/alter/rename throw,
-  * drop delegates to the same recursive delete a reset performs.
+  * for the generic tier names); other tiers fall back to parquet-footer
+  * inference, so ad-hoc stores (q44's `evt`) resolve too. A table is
+  * the tier as stored: `<ds>.dim` of statements and qualstats is the
+  * dimension's append-only log (graft.core.DimLog), which holds one
+  * row per staged row and a `seq` ordinal between folds; the folded
+  * dimension is `readDim`. DDL is out of scope by design: tables are
+  * created by the engine's commit protocols, not SQL DDL —
+  * create/alter/rename throw, drop delegates to the same recursive
+  * delete a reset performs.
   */
 final class StoreCatalog extends TableCatalog {
 

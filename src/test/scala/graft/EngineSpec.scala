@@ -1823,6 +1823,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("a snapshot commit unit plans with codegen off on its own thread " +
       "only; the session conf and other threads keep the caller's setting") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
     import org.apache.spark.sql.execution.WholeStageCodegenExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     // whole-stage codegen stages in the final plan of a small aggregate
@@ -1835,22 +1837,37 @@ class EngineSpec extends AnyFunSuite {
         case w: WholeStageCodegenExec => w
       }.size
     }
+    // the three observations, made once from inside the sink write: the
+    // optimizer runs on the writer's thread, inside the write, under its
+    // job label, which the queries planned below inherit
+    val seen = new java.util.concurrent.atomic.AtomicReference(
+      (Option.empty[String], -1, -1))
+    val observed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val probe = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val label = spark.sparkContext.getLocalProperty("spark.job.description")
+        if (label != null && label.startsWith("store: snapshot ") &&
+            observed.compareAndSet(false, true)) {
+          val other = new java.util.concurrent.atomic.AtomicInteger(-1)
+          val t = new Thread(() => other.set(codegenStages()))
+          t.start()
+          t.join()
+          seen.set((wholeStageSetting(), other.get, codegenStages()))
+        }
+        plan
+      }
+    }
     forEachWholeStageStart { (start, _) =>
       val store = new Store(spark,
         java.nio.file.Files.createTempDirectory("graft_codegen_scope").toString)
       val (ds, srvid) = ("codegen_scope", 1)
       val batch = spark.range(0, 3).toDF("v").withColumn("srvid", lit(srvid))
       store.append(ds, "staging", batch)
-      val seen = new java.util.concurrent.atomic.AtomicReference(
-        (Option.empty[String], -1, -1))
-      store.snapshotCommit(ds, "staging", srvid, Seq("current" -> batch),
-        alongside = Seq { () =>
-          val other = new java.util.concurrent.atomic.AtomicInteger(-1)
-          val t = new Thread(() => other.set(codegenStages()))
-          t.start()
-          t.join()
-          seen.set((wholeStageSetting(), other.get, codegenStages()))
-        })
+      seen.set((None, -1, -1))
+      observed.set(false)
+      spark.experimental.extraOptimizations = Seq(probe)
+      try store.snapshotCommit(ds, "staging", srvid, Seq("current" -> batch))
+      finally spark.experimental.extraOptimizations = Nil
       val (conf, otherThread, unitThread) = seen.get
       assert(conf === start, "the session conf keeps the caller's setting")
       assert(otherThread > 0, "a thread started in the unit keeps codegen")
@@ -1913,5 +1930,250 @@ class EngineSpec extends AnyFunSuite {
       Seq(ckp, uf).foreach(d =>
         assert(tierCount(e, d, GenericDatasource.Current) === 1))
     }
+  }
+
+  /** Statements staging rows at `ts`, one per (queryid, query text):
+    * dbid and userid derive from the queryid, one call each. */
+  private def statementsAt(srvid: Int, ts: Timestamp,
+      stmts: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    stmts.map { case (q, text) => (srvid, ts, q, 100L + q % 2, true, 10L, 1L, text) }
+      .toDF("srvid", "ts", "queryid", "dbid", "toplevel", "userid", "calls",
+        "query")
+      .select(col("*") +: Specs.statements.counterCols
+        .filterNot(_.name == "calls")
+        .map(c => lit(null).cast(c.dt).as(c.name)): _*)
+  }
+
+  /** Qualstats staging rows at `ts`, one per (qualid, relid of its one
+    * qual): queryid, dbid and userid derive from the qualid. */
+  private def qualstatsAt(srvid: Int, ts: Timestamp,
+      quals: Seq[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    quals.map { case (qualid, relid) =>
+        (srvid, ts, qualid, qualid % 3, 100L, 10L, 6L, 9L, 1L, 0.5, 1.0, relid) }
+      .toDF("srvid", "ts", "qualid", "queryid", "dbid", "userid",
+        "occurences", "execution_count", "nbfiltered",
+        "mean_err_estimate_ratio", "mean_err_estimate_num", "relid")
+      .withColumn("quals", array(struct(col("relid"), lit(1).as("attnum"),
+        lit(96L).as("opno"), lit("f").as("eval_type"))))
+      .withColumn("constvalues", array(lit("a")))
+      .drop("relid")
+  }
+
+  /** Throw from the optimizer of the next write labelled `label` once
+    * `ready` holds (polled up to 60 s), so a snapshot commit fails at a
+    * chosen point before its marker; `body` runs with the rule
+    * installed. */
+  private def failingWrite[T](label: String, ready: () => Boolean)(body: => T): T = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val fail = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val l = spark.sparkContext.getLocalProperty("spark.job.description")
+        if (l != null && l.startsWith(label)) {
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!ready() && System.nanoTime() < deadline) Thread.sleep(5)
+          throw new IllegalStateException("injected")
+        }
+        plan
+      }
+    }
+    spark.experimental.extraOptimizations = Seq(fail)
+    try body finally spark.experimental.extraOptimizations = Nil
+  }
+
+  /** The statements dimension log's stage directory has a completed
+    * write: its sink ran, and the commit marker has not promoted it. */
+  private def dimSinkWritten(e: Engine, srvid: Int): () => Boolean = () =>
+    java.nio.file.Files.exists(java.nio.file.Paths.get(e.store.root,
+      "powa_statements", GenericDatasource.Dim, s".snapstage_srvid=$srvid",
+      "_SUCCESS"))
+
+  test("steady-state ticks over statements and qualstats launch no " +
+      "dimension overwrite and no probe job") {
+    val e = mkEngine()
+    // phase (seq + 10) % 100 stays plain for every tick below
+    val srvid = e.registry.registerServer(ServerConfig(id = 310,
+      hostname = "h", powaCoalesce = 100, retentionSec = 86400))
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    def tick(k: Int): Unit = {
+      val ts = Timestamp.valueOf(f"2024-01-01 00:0$k:00")
+      e.ingest("powa_statements", statementsAt(srvid, ts,
+        Seq(1L -> "SELECT 1", 2L -> "SELECT 2")))
+      e.ingest("powa_qualstats", qualstatsAt(srvid, ts, Seq(7L -> 200L, 8L -> 201L)))
+      assert(e.takeSnapshot(srvid, new Timestamp(ts.getTime + 30000L)) === 0)
+    }
+    tick(1) // the keys' first tick inserts them
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (2 to 4).foreach(tick)
+      Thread.sleep(1500) // listener bus delivery is async
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val all = labels.asScala.toSeq
+    Seq("powa_statements", "powa_qualstats").foreach { ds =>
+      assert(all.count(_.startsWith(s"store: snapshot $ds->dim ")) === 3,
+        s"$ds: one dimension log append per tick")
+      assert(!all.exists(_.startsWith(s"store: overwrite $ds/dim")), all)
+    }
+    assert(!all.exists(_.startsWith("store: probe")), all)
+    val sd = e.datasource("powa_statements").asInstanceOf[StatementsDatasource]
+    assert(sd.readDim(e.store, srvid).collect().map(r =>
+      (r.getAs[Long]("queryid"), r.getAs[Timestamp]("last_present_ts"))).toSet
+      === Set(1L, 2L).map(_ -> Timestamp.valueOf("2024-01-01 00:04:30")))
+    val qd = e.datasource("powa_qualstats").asInstanceOf[QualstatsDatasource]
+    assert(qd.readDim(e.store, srvid).count() === 2)
+  }
+
+  test("a tick that fails after its dimension log sink is written leaves " +
+      "no dimension row; the retry stamps its own now") {
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(id = 311,
+      hostname = "h", powaCoalesce = 100, retentionSec = 86400))
+    val sd = e.datasource("powa_statements").asInstanceOf[StatementsDatasource]
+    def dim(): Set[(Long, String, Timestamp)] =
+      sd.readDim(e.store, srvid).collect().map(r => (r.getAs[Long]("queryid"),
+        r.getAs[String]("query"), r.getAs[Timestamp]("last_present_ts"))).toSet
+    val t1 = Timestamp.valueOf("2024-01-01 00:01:00")
+    e.ingest("powa_statements", statementsAt(srvid, t1, Seq(1L -> "SELECT 1")))
+    assert(e.takeSnapshot(srvid, t1) === 0)
+
+    val t2 = Timestamp.valueOf("2024-01-01 00:02:00")
+    e.ingest("powa_statements", statementsAt(srvid, t2,
+      Seq(1L -> "SELECT 1", 2L -> "SELECT 2")))
+    // the current sink fails once the dimension log's batch is written
+    val errs = failingWrite("store: snapshot powa_statements->current ",
+      dimSinkWritten(e, srvid))(e.takeSnapshot(srvid, t2))
+    assert(errs === 1)
+    assert(e.registry.meta(srvid).errors.last.contains("injected"))
+    assert(dimSinkWritten(e, srvid)(), "the dimension sink had been written")
+    assert(dim() === Set((1L, "SELECT 1", t1)), "no dimension row from the failed tick")
+    assert(e.store.hasPartition("powa_statements", GenericDatasource.Staging, srvid))
+
+    val t3 = Timestamp.valueOf("2024-01-01 00:03:00")
+    assert(e.takeSnapshot(srvid, t3) === 0)
+    assert(!dimSinkWritten(e, srvid)(), "the rolled-back stage dir is swept")
+    assert(dim() === Set((1L, "SELECT 1", t3), (2L, "SELECT 2", t3)))
+    assert(tierCount(e, "powa_statements", GenericDatasource.Current) === 3)
+  }
+
+  test("a tick whose now steps back behind the previous tick's stamps " +
+      "the earlier now, as an overwrite does") {
+    val e = mkEngine()
+    val srvid = e.registry.registerServer(ServerConfig(id = 312,
+      hostname = "h", powaCoalesce = 100, retentionSec = 86400))
+    val sd = e.datasource("powa_statements").asInstanceOf[StatementsDatasource]
+    val (t1, t2) = (Timestamp.valueOf("2024-01-01 00:01:00"),
+      Timestamp.valueOf("2024-01-01 00:02:00"))
+    Seq(t2, t1).foreach { now =>
+      e.ingest("powa_statements", statementsAt(srvid, now, Seq(1L -> "SELECT 1")))
+      assert(e.takeSnapshot(srvid, now) === 0)
+    }
+    assert(sd.readDim(e.store, srvid).collect().map(
+      _.getAs[Timestamp]("last_present_ts")).toSeq === Seq(t1))
+    // and so does the folded log
+    sd.aggregate(e.store, srvid)
+    assert(e.store.batchCount("powa_statements", GenericDatasource.Dim, srvid) === 0)
+    assert(sd.readDim(e.store, srvid).collect().map(
+      _.getAs[Timestamp]("last_present_ts")).toSeq === Seq(t1))
+  }
+
+  test("readDim equals the per-tick dimension rewrite after every step " +
+      "of a cycle: new and repeated keys, aggregate, purge, crash") {
+    val e = mkEngine()
+    // coalesce 5, srvid % 20 == 1: ticks 1-3 plain, 4 aggregates, 5
+    // purges, 6 plain
+    val srvid = e.registry.registerServer(ServerConfig(id = 301,
+      hostname = "h", powaCoalesce = 5, retentionSec = 3600))
+    val sd = e.datasource("powa_statements").asInstanceOf[StatementsDatasource]
+    val qd = e.datasource("powa_qualstats").asInstanceOf[QualstatsDatasource]
+    type SKey = (Long, Long, Long)
+    type QKey = (Long, Long, Long, Long)
+    // the dimension the old per-tick rewrite kept: syncDimension's MRU
+    // touch of seen keys plus its min(query) insert of missing ones, and
+    // the quals anti-join insert of the first appearance
+    var stmts = Map.empty[SKey, (String, Timestamp)]
+    var quals = Map.empty[QKey, Long]
+    def rewrite(staged: Seq[(Long, String)], q: Seq[(Long, Long)],
+        now: Timestamp): Unit = {
+      val byKey = staged.groupBy { case (id, _) => (id, 100L + id % 2, 10L) }
+      stmts = stmts.map { case (k, (text, ts)) =>
+          k -> (text, if (byKey.contains(k)) now else ts) } ++
+        byKey.collect { case (k, rows) if !stmts.contains(k) =>
+          k -> (rows.map(_._2).min, now) }
+      q.foreach { case (qualid, relid) =>
+        val k = (qualid, qualid % 3, 100L, 10L)
+        if (!quals.contains(k)) quals += k -> relid
+      }
+    }
+    def check(step: String): Unit = {
+      assert(sd.readDim(e.store, srvid).collect().map(r =>
+        (r.getAs[Long]("queryid"), r.getAs[Long]("dbid"),
+          r.getAs[Long]("userid")) -> (r.getAs[String]("query"),
+          r.getAs[Timestamp]("last_present_ts"))).toMap === stmts,
+        s"statements dimension after $step")
+      assert(qd.readDim(e.store, srvid).collect().map(r =>
+        (r.getAs[Long]("qualid"), r.getAs[Long]("queryid"),
+          r.getAs[Long]("dbid"), r.getAs[Long]("userid")) ->
+          r.getAs[Seq[org.apache.spark.sql.Row]]("quals").head
+            .getAs[Long]("relid")).toMap === quals,
+        s"quals dimension after $step")
+    }
+    def stage(now: Timestamp, staged: Seq[(Long, String)],
+        q: Seq[(Long, Long)]): Unit = {
+      e.ingest("powa_statements", statementsAt(srvid, now, staged))
+      e.ingest("powa_qualstats", qualstatsAt(srvid, now, q))
+    }
+    def tick(at: String, staged: Seq[(Long, String)], q: Seq[(Long, Long)],
+        purgedBefore: Option[String] = None): Unit = {
+      val now = Timestamp.valueOf(at)
+      stage(now, staged, q)
+      assert(e.takeSnapshot(srvid, now) === 0)
+      rewrite(staged, q, now)
+      purgedBefore.foreach(c => stmts = stmts.filter { case (_, (_, ts)) =>
+        !ts.before(Timestamp.valueOf(c)) })
+      check(s"the tick at $at")
+    }
+    // 1: new keys; key 1 twice in one tick, min(query) wins
+    tick("2024-01-01 00:00:00",
+      Seq(1L -> "SELECT b", 1L -> "SELECT a", 2L -> "SELECT 2"),
+      Seq(7L -> 200L, 8L -> 201L))
+    // 2: repeated keys (a new text for key 1 is not taken) and new ones;
+    // quals first seen keep their shape
+    tick("2024-01-01 00:05:00", Seq(1L -> "SELECT 0", 3L -> "SELECT 3"),
+      Seq(7L -> 299L, 9L -> 202L))
+    // 3: crash after the dimension log sinks are written, before the
+    // statements marker: its dimension is unchanged; qualstats commits
+    val t3 = Timestamp.valueOf("2024-01-01 00:10:00")
+    stage(t3, Seq(1L -> "SELECT 1", 4L -> "SELECT 4"), Seq(10L -> 203L))
+    assert(failingWrite("store: snapshot powa_statements->current ",
+      dimSinkWritten(e, srvid))(e.takeSnapshot(srvid, t3)) === 1)
+    rewrite(Nil, Seq(10L -> 203L), t3)
+    check("the crashed tick")
+    // 4: the retry drains the same staged rows on the aggregate tick,
+    // which folds both logs
+    val t4 = Timestamp.valueOf("2024-01-01 00:11:00")
+    assert(e.takeSnapshot(srvid, t4) === 0)
+    assert(e.registry.meta(srvid).aggts === Some(t4))
+    rewrite(Seq(1L -> "SELECT 1", 4L -> "SELECT 4"), Nil, t4)
+    check("the aggregate")
+    Seq("powa_statements", "powa_qualstats").foreach(ds =>
+      assert(e.store.batchCount(ds, GenericDatasource.Dim, srvid) === 0,
+        s"$ds: the aggregate folds the log"))
+    // 5: the purge ages out keys last seen before its cutoff, 00:08
+    tick("2024-01-01 01:08:00", Seq(5L -> "SELECT 5"), Seq(7L -> 200L),
+      purgedBefore = Some("2024-01-01 00:08:00"))
+    assert(e.registry.meta(srvid).purgets ===
+      Some(Timestamp.valueOf("2024-01-01 01:08:00")))
+    assert(stmts.keySet.map(_._1) === Set(1L, 4L, 5L))
+    // 6: a purged key comes back as new, with its new text
+    tick("2024-01-01 01:13:00", Seq(2L -> "SELECT two"), Seq(8L -> 201L))
   }
 }

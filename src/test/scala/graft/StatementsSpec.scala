@@ -101,17 +101,14 @@ class StatementsSpec extends AnyFunSuite {
   test("statements snapshot chain: dim MRU + missing insert + two sinks") {
     val root = java.nio.file.Files.createTempDirectory("graft_stmt").toString
     val store = new Store(spark, root)
-    val emptyDim = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("queryid", LongType), StructField("dbid", LongType),
-        StructField("userid", LongType), StructField("query", StringType),
-        StructField("last_present_ts", TimestampType))))
+    val dimLog = new StatementsDatasource().dimLog
 
     val name = Specs.statements.name
     val cap1 = StatementsSource.capture(raw111(), 111, Seq("ignored_bot"), t0)
-    val (dim1, sinks1) = StatementsPipeline.snapshot(emptyDim, cap1, 1, t0)
-    store.snapshotCommit(name, GenericDatasource.Staging, 1, sinks1)
+    val (rows1, sinks1) = StatementsPipeline.snapshot(cap1, 1, t0)
+    store.snapshotCommit(name, GenericDatasource.Staging, 1,
+      sinks1 :+ dimLog.sink(store, 1, rows1))
+    val dim1 = dimLog.read(store, 1)
     assert(dim1.count() === 1) // one new statement inserted
     assert(dim1.head().getAs[Timestamp]("last_present_ts") ===
       Timestamp.valueOf("2024-01-01 00:00:00"))
@@ -119,8 +116,10 @@ class StatementsSpec extends AnyFunSuite {
     // second tick: same statement seen again at t1 → MRU touch, no dup
     val t1 = lit(Timestamp.valueOf("2024-01-01 00:05:00"))
     val cap2 = StatementsSource.capture(raw111(), 111, Seq("ignored_bot"), t1)
-    val (dim2, sinks2) = StatementsPipeline.snapshot(dim1, cap2, 1, t1)
-    store.snapshotCommit(name, GenericDatasource.Staging, 1, sinks2)
+    val (rows2, sinks2) = StatementsPipeline.snapshot(cap2, 1, t1)
+    store.snapshotCommit(name, GenericDatasource.Staging, 1,
+      sinks2 :+ dimLog.sink(store, 1, rows2))
+    val dim2 = dimLog.read(store, 1)
     assert(dim2.count() === 1)
     assert(dim2.head().getAs[Timestamp]("last_present_ts") ===
       Timestamp.valueOf("2024-01-01 00:05:00"))
