@@ -51,14 +51,14 @@ final class DimLog(ds: String, schema: StructType, keys: Seq[String],
     if (store.batchCount(ds, Dim, srvid) > 0) rewrite(store, srvid, lit(true))
 
   /** Fold the log into one file, keeping the folded rows that satisfy
-    * `keep` (the retention filter of a purge). Planned with whole-stage
-    * codegen off, like the tick writes ([[Store.tickCodegenScope]]). */
+    * `keep` (the retention filter of a purge). Keeps code generation,
+    * like the aggregate and the purge that call it: the log grows with
+    * the ticks since the last fold, up to a whole coalesce cycle. */
   def rewrite(store: Store, srvid: Int, keep: Column): Unit =
-    if (store.hasPartition(ds, Dim, srvid)) store.tickCodegenScope {
+    if (store.hasPartition(ds, Dim, srvid))
       store.overwritePartition(ds, Dim, srvid,
         read(store, srvid).filter(keep)
           .withColumn(SeqCol, lit(0L)).withColumn("srvid", lit(srvid)))
-    }
 
   /** One row per key: each `first` column is its minimum non-null value
     * in the key's first-appended batch (the insert arm's `min(query)`),

@@ -149,11 +149,9 @@ class GenericDatasource(val spec: DatasourceSpec) {
     // a present current partition implies rows (only nonempty appends
     // create it), so no isEmpty action — the directory probe is the gate
     def one(tierCur: String, tierHist: String, s: DatasourceSpec): Unit =
-      if (store.hasPartition(name, tierCur, srvid)) { // no job when idle
-        val cur = store.readPartition(name, tierCur, srvid, currentNoSrvid(s))
-        store.aggregateCommit(name, tierCur, tierHist,
-          srvid, Coalesce.aggregate(cur, s))
-      }
+      if (store.hasPartition(name, tierCur, srvid)) // no job when idle
+        store.aggregateCycle(name, tierCur, tierHist, srvid,
+          currentNoSrvid(s))(Coalesce.aggregate(_, s))
     one(Current, History, spec)
     dbSpec.foreach(dbs => one(CurrentDb, HistoryDb, dbs))
   }

@@ -162,12 +162,9 @@ final class QualstatsDatasource extends GenericDatasource(Specs.qualstats) {
     * cadence. */
   override def aggregate(store: Store, srvid: Int): Unit = {
     super.aggregate(store, srvid)
-    if (store.hasPartition(name, Constvalues, srvid)) { // dir => rows
-      val cv = store.readPartition(name, Constvalues, srvid,
-        constvaluesSchema)
-      store.aggregateCommit(name, Constvalues, ConstvaluesHistory,
-        srvid, aggregateConstvalues(cv))
-    }
+    if (store.hasPartition(name, Constvalues, srvid)) // dir => rows
+      store.aggregateCycle(name, Constvalues, ConstvaluesHistory, srvid,
+        constvaluesSchema)(aggregateConstvalues(_))
     dimLog.compact(store, srvid)
   }
 

@@ -29,10 +29,13 @@ import org.apache.spark.sql.types.StructType
   * the commit protocol below (SURVEY.md §7.4 item 2).
   *
   * Session conf: the store writes one session setting, the MICROS
-  * timestamp pin at construction. Tick writes turn whole-stage codegen
-  * off on their own thread only (a clone of the session conf as the
-  * thread's `SQLConf.get`, [[tickCodegenScope]]), so queries planned on
-  * other threads of the same session during a tick keep codegen.
+  * timestamp pin at construction. Per-tick writes (the ingest append
+  * and the snapshot sinks) and the aggregate of a small cycle
+  * ([[aggregateCycle]]) run with no code generation, on their own
+  * thread only ([[tickCodegenScope]]); larger aggregates, the dimension
+  * log folds, purge rewrites, compaction, the fleet write and every read
+  * keep codegen, and queries planned on other threads of the same
+  * session during a tick keep it too.
   */
 final class Store(val spark: SparkSession, val root: String) {
 
@@ -72,35 +75,58 @@ final class Store(val spark: SparkSession, val root: String) {
     finally sc.setLocalProperty("spark.job.description", prev)
   }
 
-  /** Whole-stage codegen off for the PER-TICK write paths (ingest
-    * append + snapshot sinks, the dimension logs' appends among them).
-    * Measured (guide §1):
-    * every tick's plans embed that tick's timestamp/batch literals, so
-    * the generated source differs per tick and janino recompiles every
-    * stage on every tick — q34's 35-counter statements plans paid
-    * ~1 s/query of pure compilation (bench 5.3 → 4.2 s with codegen
-    * off). The trade is scale-INdependent for this path: a per-server
-    * tick frame is small by cadence construction (one tick's staged
-    * samples), so interpreted execution costs O(tick rows) while the
-    * compile cost recurs per tick forever. Aggregate/purge/compact of
-    * the fact tiers and every read path keep codegen (their inputs grow
-    * with coalesce_seq × tick — q33's constvalues pack measurably WANTS
-    * codegen), as does the fleet write (one job for the whole fleet).
-    * The dimension log folds ([[DimLog]]) run in the scope too: a fold
-    * reads one server's dimension, small by construction (its keys ×
-    * the ticks since the last fold), and the purge's fold embeds that
-    * tick's cutoff.
+  /** No code generation for the PER-TICK write paths: the ingest
+    * append and every snapshot sink, the dimension logs' appends among
+    * them. Each reads one tick's staged rows, small by cadence
+    * construction, so interpreted execution costs O(tick rows) while
+    * generated code costs janino time that recurs: per-tick plans embed
+    * that tick's timestamp and batch literals, so their generated
+    * source differs per tick (q34's 35-counter statements plans paid
+    * ~1 s/query of pure compilation with whole-stage codegen on; the
+    * dimension logs' per-tick ordinal compiled a projection class per
+    * append with it off). In the scope a plain tick compiles no class.
     *
-    * Thread-confined: `body` plans under a clone of the session's SQL
-    * conf installed as this thread's `SQLConf.get`, which is what
-    * CollapseCodegenStages reads, so the session conf is never written
-    * and queries planned on other threads keep codegen. A thread-local
-    * is not inherited by pool threads, so a caller running units on
+    * What reads more than one tick keeps codegen, unless its size is
+    * known to be small: [[aggregateCycle]] enters the scope only for a
+    * cycle of at most [[SmallCycleBytes]], because at PoWA's default
+    * sizes (5,000 statements × 100 ticks) the aggregate runs several
+    * times slower interpreted (SCALE.md, "The aggregate with no code
+    * generation, by cycle size"). The dimension log folds ([[DimLog]])
+    * read up to a whole cycle too and keep codegen; purge rewrites,
+    * compaction, the fleet write (one job for the whole fleet) and every
+    * read path grow with retention or with the fleet.
+    *
+    * Two settings, both confined to the calling thread:
+    *   - planning runs under a clone of the session's SQL conf with
+    *     whole-stage codegen off and `spark.sql.codegen.factoryMode`
+    *     (`SQLConf.CODEGEN_FACTORY_MODE`) = NO_CODEGEN, installed as
+    *     this thread's `SQLConf.get`, which `CollapseCodegenStages` and
+    *     the expression factories (`CodeGeneratorWithInterpretedFallback`)
+    *     read;
+    *   - tasks read SQL confs from their job's local properties
+    *     (`ReadOnlySQLConf`), and `SQLExecution.withSQLConfPropagated`
+    *     copies into them only the keys the session's own conf holds,
+    *     so the same key is also a SparkContext local property of this
+    *     thread, restored after.
+    * The session conf is never written. `factoryMode` is an internal
+    * Spark conf, documented as a test fallback switch, and both halves
+    * rest on how these Spark classes behave in the Spark version the
+    * build pins (README, "Upgrading Spark"); EngineSpec pins both halves
+    * of the confinement and the zero-compile plain tick. Spark's local
+    * properties are inherited by threads created inside the scope (the
+    * store creates none there), and a thread-local conf is not
+    * inherited by pool threads, so a caller running units on
     * [[Parallel.map]] enters the scope inside each unit. */
   private[core] def tickCodegenScope[T](body: => T): T = {
+    val factoryMode = "spark.sql.codegen.factoryMode"
     val tickConf = spark.sessionState.conf.clone()
     tickConf.setConfString("spark.sql.codegen.wholeStage", "false")
-    SQLConf.withExistingConf(tickConf)(body)
+    tickConf.setConfString(factoryMode, "NO_CODEGEN")
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(factoryMode)
+    sc.setLocalProperty(factoryMode, "NO_CODEGEN")
+    try SQLConf.withExistingConf(tickConf)(body)
+    finally sc.setLocalProperty(factoryMode, prev)
   }
 
   private def dir(ds: String, tier: String): Path = Paths.get(root, ds, tier)
@@ -578,6 +604,49 @@ final class Store(val spark: SparkSession, val root: String) {
     dir(ds, histTier).resolve(s".inflight_srvid=$srvid")
   private def committedDir(ds: String, histTier: String, srvid: Int): Path =
     dir(ds, histTier).resolve(s".committed_srvid=$srvid")
+
+  /** Aggregate one server's cycle: read its `curTier` partition with
+    * `schema`, coalesce it with `coalesce` and commit the result into
+    * `histTier` ([[aggregateCommit]]). The path follows the cycle's
+    * size, read from the partition's file bytes (a directory walk, no
+    * Spark job). A cycle of at most [[SmallCycleBytes]] is read as ONE
+    * partition, so the coalesce's group-by runs in one task with no
+    * exchange, and written with no code generation
+    * ([[tickCodegenScope]]): one aggregate's generated classes outnumber
+    * Spark's codegen cache, so with codegen every cycle recompiles them,
+    * which costs more than the work at cadence sizes. A larger cycle
+    * keeps the partitioned, generated path, which interpreted execution
+    * loses to from about ten thousand rows (SCALE.md, "The aggregate
+    * with no code generation, by cycle size"). */
+  def aggregateCycle(ds: String, curTier: String, histTier: String,
+      srvid: Int, schema: StructType)(coalesce: DataFrame => DataFrame): Unit = {
+    val cur = readPartition(ds, curTier, srvid, schema)
+    if (partitionBytes(ds, curTier, srvid) > SmallCycleBytes)
+      aggregateCommit(ds, curTier, histTier, srvid, coalesce(cur))
+    else tickCodegenScope(
+      aggregateCommit(ds, curTier, histTier, srvid, coalesce(cur.coalesce(1))))
+  }
+
+  /** The largest cycle, in parquet bytes, that [[aggregateCycle]] runs
+    * in one task with no code generation. One server's statements
+    * aggregate (35 counters) written in one piece, 4 cores: at 5,000
+    * rows (0.8 MB) interpreted costs what warm generated code does and
+    * less than generated code the cache has evicted; at 10,000 rows
+    * (1.6 MB) it lies between the two; at 20,000 (3.2 MB) it loses to
+    * both (SCALE.md). A cycle written tick by tick carries one parquet
+    * footer per tick, so the same bytes hold fewer rows. */
+  private val SmallCycleBytes = 1L << 20
+
+  /** Parquet bytes in one server's live partition of a tier. */
+  private def partitionBytes(ds: String, tier: String, srvid: Int): Long =
+    AtomicSwap.liveTarget(dir(ds, tier), s"srvid=$srvid") match {
+      case Some(v) =>
+        val s = Files.walk(v)
+        try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(Files.size(_)).sum
+        finally s.close()
+      case None => 0L
+    }
 
   /** Atomically replace `current(srvid)` with its coalesced form appended
     * into the bucketed `histTier`. `df` must carry `range_start` (for the

@@ -1821,6 +1821,22 @@ class EngineSpec extends AnyFunSuite {
     } finally setTo(saved)
   }
 
+  private val factoryMode = "spark.sql.codegen.factoryMode"
+
+  /** Classes compiled JVM-wide while `body` runs. */
+  private def compiles(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  /** A query whose generated code is new on every call: its long literal
+    * is inlined into the generated source, so the codegen cache misses. */
+  private def freshQuery(): Unit =
+    spark.range(0, 10).select((col("id") * lit(System.nanoTime())).as("x"))
+      .collect()
+
   test("a snapshot commit unit plans with codegen off on its own thread " +
       "only; the session conf and other threads keep the caller's setting") {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -1837,43 +1853,197 @@ class EngineSpec extends AnyFunSuite {
         case w: WholeStageCodegenExec => w
       }.size
     }
-    // the three observations, made once from inside the sink write: the
+    final case class Seen(wholeStage: Option[String], factoryInSession: Boolean,
+        startedThreadStages: Int, unitStages: Int, readerCompiles: Long,
+        unitCompiles: Long)
+    val sc = spark.sparkContext
+    // a thread that exists before any write, as a dashboard reader's
+    // would: it inherits none of the write's local properties
+    val reader = java.util.concurrent.Executors.newSingleThreadExecutor()
+    reader.submit(new Runnable { def run(): Unit = () }).get()
+    // the observations, made once from inside the sink write: the
     // optimizer runs on the writer's thread, inside the write, under its
-    // job label, which the queries planned below inherit
-    val seen = new java.util.concurrent.atomic.AtomicReference(
-      (Option.empty[String], -1, -1))
+    // job label, which the queries planned below inherit; the reader's
+    // query runs while the writer waits for it
+    val seen = new java.util.concurrent.atomic.AtomicReference[Seen]
     val observed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val probe = new Rule[LogicalPlan] {
       def apply(plan: LogicalPlan): LogicalPlan = {
-        val label = spark.sparkContext.getLocalProperty("spark.job.description")
+        val label = sc.getLocalProperty("spark.job.description")
         if (label != null && label.startsWith("store: snapshot ") &&
             observed.compareAndSet(false, true)) {
           val other = new java.util.concurrent.atomic.AtomicInteger(-1)
           val t = new Thread(() => other.set(codegenStages()))
           t.start()
           t.join()
-          seen.set((wholeStageSetting(), other.get, codegenStages()))
+          val readerCompiles = compiles(reader.submit(new Runnable {
+            def run(): Unit = freshQuery() }).get())
+          seen.set(Seen(wholeStageSetting(),
+            spark.conf.getAll.contains(factoryMode), other.get,
+            codegenStages(), readerCompiles, compiles(freshQuery())))
         }
         plan
       }
     }
-    forEachWholeStageStart { (start, _) =>
-      val store = new Store(spark,
-        java.nio.file.Files.createTempDirectory("graft_codegen_scope").toString)
-      val (ds, srvid) = ("codegen_scope", 1)
-      val batch = spark.range(0, 3).toDF("v").withColumn("srvid", lit(srvid))
-      store.append(ds, "staging", batch)
-      seen.set((None, -1, -1))
-      observed.set(false)
+    try forEachWholeStageStart { (start, i) =>
+      // the thread's factoryMode local property before the write:
+      // explicitly the default, then unset
+      val prior = if (i == 0) "FALLBACK" else null
+      sc.setLocalProperty(factoryMode, prior)
+      try {
+        val store = new Store(spark, java.nio.file.Files
+          .createTempDirectory("graft_codegen_scope").toString)
+        val (ds, srvid) = ("codegen_scope", 1)
+        val batch = spark.range(0, 3).toDF("v").withColumn("srvid", lit(srvid))
+        store.append(ds, "staging", batch)
+        seen.set(null)
+        observed.set(false)
+        spark.experimental.extraOptimizations = Seq(probe)
+        try store.snapshotCommit(ds, "staging", srvid, Seq("current" -> batch))
+        finally spark.experimental.extraOptimizations = Nil
+        val s = seen.get
+        assert(s.wholeStage === start, "the session conf keeps the caller's setting")
+        assert(s.startedThreadStages > 0, "a thread started in the unit keeps codegen")
+        assert(s.unitStages === 0, "the unit's own thread plans with codegen off")
+        assert(wholeStageSetting() === start)
+        assert(store.read(ds, "current", batch.schema).count() === 3)
+        assert(!s.factoryInSession && !spark.conf.getAll.contains(factoryMode),
+          "the session conf never holds the factory mode")
+        assert(s.readerCompiles > 0,
+          "a query on another thread during the write still compiles")
+        assert(s.unitCompiles === 0, "the unit's own thread generates no code")
+        assert(sc.getLocalProperty(factoryMode) === prior)
+        assert(compiles(freshQuery()) > 0, "a query after the write compiles")
+        // a write that throws restores the thread's property just the same
+        intercept[IllegalStateException](
+          failingWrite("store: snapshot ", () => true)(
+            store.snapshotCommit(ds, "staging", srvid, Seq("current" -> batch))))
+        assert(sc.getLocalProperty(factoryMode) === prior)
+        assert(!spark.conf.getAll.contains(factoryMode))
+        assert(compiles(freshQuery()) > 0, "a query after the failed write compiles")
+      } finally sc.setLocalProperty(factoryMode, null)
+    } finally reader.shutdown()
+  }
+
+  test("steady-state plain ticks compile no class; the aggregate's " +
+      "history rows equal the coalesce computed outside the tick") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import GenericDatasource.{Current, CurrentDb, History, HistoryDb}
+    val e = mkEngine()
+    // phase (seq + 1) % 5: three plain ticks, aggregate, purge; each
+    // purge drops the range the aggregate before it wrote (retention 60 s)
+    val srvid = e.registry.registerServer(ServerConfig(id = 321,
+      hostname = "h", powaCoalesce = 5, retentionSec = 60))
+    val sd = e.datasource("powa_statements")
+    val qd = e.datasource("powa_qualstats").asInstanceOf[QualstatsDatasource]
+    def tick(k: Int): Unit = {
+      val ts = Timestamp.valueOf(f"2024-01-01 00:${5 * k}%02d:00")
+      e.ingest("powa_statements", statementsAt(srvid, ts,
+        Seq(1L -> "SELECT 1", 2L -> "SELECT 2")))
+      e.ingest("powa_qualstats", qualstatsAt(srvid, ts, Seq(7L -> 200L, 8L -> 201L)))
+      assert(e.takeSnapshot(srvid, new Timestamp(ts.getTime + 30000L)) === 0)
+    }
+    // (datasource, current tier) -> (history tier, its schema without
+    // srvid, the coalesce of the current rows)
+    val aggregates: Map[(String, String), (String, StructType, DataFrame => DataFrame)] =
+      Seq(sd, qd).flatMap { d =>
+        val tiers = (Current, History, d.spec) +:
+          d.dbSpec.map(dbs => (CurrentDb, HistoryDb, dbs)).toSeq
+        tiers.map { case (cur, hist, s) =>
+          (d.name, cur) -> ((hist, GenericDatasource.historyNoSrvid(s),
+            (df: DataFrame) => graft.operators.Coalesce.aggregate(df, s)))
+        }
+      }.toMap + ((qd.name, qd.Constvalues) -> ((qd.ConstvaluesHistory,
+        qd.constvaluesHistorySchema, (df: DataFrame) => qd.aggregateConstvalues(df))))
+    def currentSchema(ds: String, cur: String): StructType =
+      if (cur == qd.Constvalues) qd.constvaluesSchema
+      else GenericDatasource.currentNoSrvid(
+        if (cur == Current) e.datasource(ds).spec else e.datasource(ds).dbSpec.get)
+    def rows(df: DataFrame, hist: StructType): Seq[String] =
+      df.select(("srvid" +: hist.fieldNames.toSeq).map(col): _*)
+        .collect().map(_.toString).toSeq.sorted
+    // while each aggregate write of the first cycle is planned, its
+    // current rows are coalesced on a thread that exists before the
+    // tick, outside the write's scope, with codegen
+    val outside = java.util.concurrent.Executors.newSingleThreadExecutor()
+    outside.submit(new Runnable { def run(): Unit = () }).get()
+    val expected = new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[String]]
+    val Label = """store: aggregate (\S+)/(\S+)->\S+ srvid=\d+""".r
+    val probe = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        spark.sparkContext.getLocalProperty("spark.job.description") match {
+          case Label(ds, cur) if !expected.containsKey((ds, cur)) =>
+            val (_, hist, coalesce) = aggregates((ds, cur))
+            expected.put((ds, cur), outside.submit(
+              new java.util.concurrent.Callable[Seq[String]] {
+                def call(): Seq[String] = rows(coalesce(e.store.readPartition(
+                  ds, cur, srvid, currentSchema(ds, cur))), hist)
+              }).get())
+          case _ =>
+        }
+        plan
+      }
+    }
+    try {
+      (1 to 3).foreach(tick)
       spark.experimental.extraOptimizations = Seq(probe)
-      try store.snapshotCommit(ds, "staging", srvid, Seq("current" -> batch))
-      finally spark.experimental.extraOptimizations = Nil
-      val (conf, otherThread, unitThread) = seen.get
-      assert(conf === start, "the session conf keeps the caller's setting")
-      assert(otherThread > 0, "a thread started in the unit keeps codegen")
-      assert(unitThread === 0, "the unit's own thread plans with codegen off")
-      assert(wholeStageSetting() === start)
-      assert(store.read(ds, "current", batch.schema).count() === 3)
+      try tick(4) finally spark.experimental.extraOptimizations = Nil
+    } finally outside.shutdown()
+    assert(expected.keySet.asScala.map(_._2).toSet ===
+      Set(Current, CurrentDb, qd.Constvalues))
+    expected.asScala.foreach { case ((ds, cur), want) =>
+      val (histTier, hist, _) = aggregates((ds, cur))
+      assert(want.nonEmpty, s"$ds/$cur")
+      assert(rows(e.store.readPartition(ds, histTier, srvid, hist), hist) === want,
+        s"$ds/$histTier")
+    }
+    tick(5)
+    // the purge's dimension-log fold keeps codegen and embeds that
+    // tick's cutoff, so the purge tick (10) is left out
+    assert(compiles((6 to 9).foreach(tick)) === 0,
+      "the second cycle's plain ticks and aggregate compile no class")
+  }
+
+  test("an aggregate cycle runs with no code generation when small and " +
+      "keeps it when large") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.internal.SQLConf
+    val store = new Store(spark, java.nio.file.Files
+      .createTempDirectory("graft_cycle_size").toString)
+    val schema = new StructType().add("range_start", "timestamp").add("v", "string")
+    // 3 rows, and over 3 MiB of parquet (the store's bound is 1 MiB):
+    // 256 random hex digits, at least 128 bytes, a row
+    val rows = Map(1 -> 3L, 2 -> 30000L)
+    rows.foreach { case (srvid, n) =>
+      store.appendPartition("cycle", "cur", srvid, spark.range(0, n).select(
+        lit(srvid).as("srvid"), lit(Timestamp.valueOf("2024-01-01 00:00:00"))
+          .as("range_start"),
+        concat((1 to 4).map(i => sha2((rand(i) * col("id")).cast("string"), 256)): _*)
+          .as("v")))
+    }
+    // the factory mode each aggregate write plans under
+    val mode = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val Label = """store: aggregate .* srvid=(\d+)""".r
+    val probe = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        spark.sparkContext.getLocalProperty("spark.job.description") match {
+          case Label(srvid) => mode.putIfAbsent(srvid.toInt,
+            SQLConf.get.getConfString(factoryMode, "FALLBACK"))
+          case _ =>
+        }
+        plan
+      }
+    }
+    spark.experimental.extraOptimizations = Seq(probe)
+    try rows.keys.foreach(srvid =>
+      store.aggregateCycle("cycle", "cur", "hist", srvid, schema)(identity))
+    finally spark.experimental.extraOptimizations = Nil
+    assert(mode.asScala.toMap === Map(1 -> "NO_CODEGEN", 2 -> "FALLBACK"))
+    rows.foreach { case (srvid, n) =>
+      assert(!store.hasPartition("cycle", "cur", srvid))
+      assert(store.readPartition("cycle", "hist", srvid, schema).count() === n)
     }
   }
 

@@ -24,14 +24,19 @@ class ParallelSpec extends AnyFunSuite {
 
   test("width 2: a running unit is awaited, unstarted ones are skipped, " +
       "and the earliest failure in input order is rethrown unwrapped") {
+    // unit 1 fails only once unit 0 runs: a pool thread may otherwise
+    // reach unit 1 first, and unit 0, not yet started, is then skipped
+    val zeroRunning = new CountDownLatch(1)
     val oneFailed = new CountDownLatch(1)
     val ran = new ConcurrentLinkedQueue[Int]()
     val ex = intercept[Error] {
       Parallel.map(0 until 4, 2) { i =>
         ran.add(i)
         i match {
-          case 0 => oneFailed.await(); throw new Error("zero")
-          case 1 => oneFailed.countDown(); throw new IllegalStateException("one")
+          case 0 => zeroRunning.countDown(); oneFailed.await(); throw new Error("zero")
+          case 1 =>
+            zeroRunning.await(); oneFailed.countDown()
+            throw new IllegalStateException("one")
           case _ => i
         }
       }
