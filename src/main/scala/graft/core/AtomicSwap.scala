@@ -88,12 +88,14 @@ object AtomicSwap {
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
   /** Per-file min/max of the [[statCols]] INT64 chunks, from the
-    * parquet footer. A column qualifies only when EVERY row group
-    * carries valid statistics for it (all-null groups are safe — a
-    * range predicate never matches null); any unreadable footer or
-    * stat yields no entry, which readers treat as "cannot skip".
-    * Stats are an optimization: this never fails a commit. */
-  private def parquetRangeStats(file: Path): Map[String, (Long, Long)] = {
+    * parquet footer; None when the footer cannot be read. A column
+    * qualifies only when EVERY row group carries valid statistics for
+    * it (all-null groups are safe — a range predicate never matches
+    * null); a file without any qualifying column yields an empty map,
+    * which readers treat as "cannot skip". Stats are an optimization:
+    * this never fails a commit. */
+  private def parquetRangeStats(
+      file: Path): Option[Map[String, (Long, Long)]] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -123,10 +125,14 @@ object AtomicSwap {
             }
           }
         }
-        (acc -- bad).toMap
+        Some((acc -- bad).toMap)
       } finally r.close()
-    } catch { case _: Throwable => Map.empty }
+    } catch { case _: Throwable => None }
   }
+
+  /** Pseudo-entry of a file whose footer was read and holds no stat
+    * column: a known absence, carried forward like real stats. */
+  private val NoStats = Map("_nostats" -> (0L, 0L))
 
   /** Publish the manifest for the freshly flipped version.
     *
@@ -188,13 +194,14 @@ object AtomicSwap {
         // (round-11 ADVICE); mtime closes that window. A pre-`_mtime`
         // manifest (no `_mtime` key) never carries forward — it pays
         // one full footer re-read, the same rule as a widened stat
-        // column set. A listed path with EMPTY real stats is still
-        // "unknown", not "known to have none": one transient
-        // footer-read failure must not pin a file stats-less forever —
-        // so only non-empty real stats carry forward; legitimately
-        // stats-less files (no stat columns at all, e.g. registry
-        // config parquet) pay a footer re-read per publish, bounded by
-        // their count.
+        // column set. A footer read that succeeded and found no stat
+        // column is recorded as the `_nostats` pseudo-entry (stripped
+        // by manifestEntries too) and carries forward like real stats,
+        // so stats-less files (dimension-log batches, registry config
+        // parquet) are opened once, not on every republish. A listed
+        // path with neither stats nor `_nostats` is "unknown" — one
+        // transient footer-read failure must not pin a file stats-less
+        // forever — and its footer is read again.
         val abs = parent.resolve(rel)
         val curLen: Long =
           try Files.size(abs) catch { case _: Throwable => -1L }
@@ -207,7 +214,8 @@ object AtomicSwap {
             m.get("_mtime").exists { case (a, _) => a == curMtime })
           .map(_ - "_len" - "_mtime").filter(_.nonEmpty)
         val stats = carried
-          .getOrElse(parquetRangeStats(abs))
+          .orElse(parquetRangeStats(abs).map(st => if (st.isEmpty) NoStats else st))
+          .getOrElse(Map.empty)
         val withLen = stats ++
           (if (curLen >= 0L) Map("_len" -> (curLen, curLen)) else Map.empty) ++
           (if (curMtime >= 0L) Map("_mtime" -> (curMtime, curMtime))
@@ -301,9 +309,10 @@ object AtomicSwap {
   def manifestEntries(parent: Path,
       linkName: String): Option[Seq[(Path, Map[String, (Long, Long)])]] =
     readManifestRaw(parent, linkName).map(_._2.map { case (rel, st) =>
-      // `_len`/`_mtime` are the carry-forward key (writeManifest), not
-      // stat columns — internal to the publisher, stripped for readers
-      (parent.resolve(rel), st - "_len" - "_mtime")
+      // `_len`/`_mtime` are the carry-forward key and `_nostats` a known
+      // absence (writeManifest), not stat columns — internal to the
+      // publisher, stripped for readers
+      (parent.resolve(rel), st - "_len" - "_mtime" - "_nostats")
     })
 
   private def parseKvs(

@@ -51,29 +51,27 @@ class GenericDatasource(val spec: DatasourceSpec) {
   }
 
   /** Run `commit` over this server's staged rows; returns their count
-    * (−1 when tracing is off). ONE cached partition: the frame holds one
-    * server's samples since its last tick, so each sink tier is one
-    * task writing one file per tick, however many files the collector
-    * landed. Cached: the sinks are several outputs of one scan (SURVEY.md
-    * §7.4 item 6). A staging partition implies staged rows (ingest writes
-    * none for an empty frame), so the count is trace-only, not a gate. */
+    * (−1 when tracing is off). The rows are read from the staging files
+    * listed once ([[Store.readStaged]]), so every sink derived from them
+    * reads the same rows, with no cache to materialize as a job of its
+    * own. ONE partition: the frame holds one server's samples since its
+    * last tick, so each sink tier is one task writing one file per tick,
+    * however many files the collector landed. A staging partition
+    * implies staged rows (ingest writes none for an empty frame), so
+    * the count is trace-only, not a gate. */
   protected def withStaged(store: Store, srvid: Int, schema: StructType)(
       commit: DataFrame => Unit): Long = {
-    val staged = store.read(name, Staging, schema)
-      .filter(col("srvid") === srvid)
+    val staged = store.readStaged(name, Staging, Seq(srvid), schema)
       .coalesce(1)
-      .cache()
-    try {
-      val n = if (store.traceRowcounts) staged.count() else -1L
-      if (n != 0) commit(staged)
-      n
-    } finally staged.unpersist()
+    val n = if (store.traceRowcounts) staged.count() else -1L
+    if (n != 0) commit(staged)
+    n
   }
 
   /** The generic snapshot transform: staged rows → (tier, frame) sink
-    * batches, srvid column retained (the sequential commit drops it at
-    * write, the fleet commit partitions on it). ONE definition so the
-    * per-server and fleet paths cannot drift. */
+    * batches, srvid column retained (the commit's tasks write each row
+    * into its server's stage dir). ONE definition so the per-server and
+    * fleet paths cannot drift. */
   private def snapshotSinks(staged: DataFrame): Seq[(String, DataFrame)] = {
     val keyCols = spec.keyNames.map(col)
     val recordCol = struct((col("ts") +: spec.counterCols.map(c => col(c.name))): _*)
@@ -90,11 +88,11 @@ class GenericDatasource(val spec: DatasourceSpec) {
     }
   }
 
-  /** Vectorized fleet snapshot: ONE Spark job per sink tier lands EVERY
-    * staged server's tick (guide §2/§5 — the per-(server, datasource)
-    * loop is a driver scheduling bottleneck at fleet scale: ~230k tiny
-    * jobs for a fully-staged 10k-server tick; this form is one scan +
-    * one write per tier for the whole fleet, the same shape the remote
+  /** Vectorized fleet snapshot: ONE Spark job lands EVERY staged
+    * server's tick of this datasource (guide §2/§5 — the per-(server,
+    * datasource) loop is a driver scheduling bottleneck at fleet scale:
+    * ~230k tiny jobs for a fully-staged 10k-server tick; this form is one
+    * scan + one write job for the whole fleet, the same shape the remote
     * collector's one repository tick stream implies). The per-server
     * COMMIT protocol is unchanged — [[Store.snapshotCommitFleet]] runs
     * marker → drain → promote per srvid over filesystem ops only.
@@ -124,20 +122,15 @@ class GenericDatasource(val spec: DatasourceSpec) {
     // (guide §2.2/§6: fewer, larger map tasks). Scale-adaptive, not a
     // local constant: defaultParallelism IS the cluster's core count.
     val parallelism = store.spark.sparkContext.defaultParallelism
-    val staged = store.read(name, Staging, spec.stagingSchema)
-      .filter(col("srvid").isin(srvids.map(Int.box): _*))
-      .coalesce(parallelism)
-      .cache() // sinks + trace count from one scan, like withStaged
-    try {
-      val counts: Map[Int, Long] =
-        if (store.traceRowcounts)
-          staged.groupBy(col("srvid")).count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        else Map.empty
-      store.snapshotCommitFleet(name, Staging, srvids,
-        snapshotSinks(staged))
-      srvids.map(id => id -> counts.getOrElse(id, -1L)).toMap
-    } finally staged.unpersist()
+    val staged = store.readStaged(name, Staging, srvids, spec.stagingSchema)
+      .coalesce(parallelism) // pinned files, like withStaged
+    val counts: Map[Int, Long] =
+      if (store.traceRowcounts)
+        staged.groupBy(col("srvid")).count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      else Map.empty
+    store.snapshotCommitFleet(name, Staging, srvids, snapshotSinks(staged))
+    srvids.map(id => id -> counts.getOrElse(id, -1L)).toMap
   }
 
   /** Aggregate (generated `{ds}_aggregate`, :1490-1540): coalesce this
@@ -175,7 +168,7 @@ class GenericDatasource(val spec: DatasourceSpec) {
     * single-transaction guarantee of the reference's aggregate,
     * powa--5.2.0.sql:6047-6055, restored over plain files). */
   def recover(store: Store): Unit = {
-    store.cleanFleetStages(name) // crashed fleet write's invisible temps
+    store.cleanFleetStages(name) // an older build's crashed fleet write
     store.snapshotPendingSrvids(name)
       .foreach(id => store.recoverSnapshot(name, Staging, id))
     store.inflightSrvids(name, History)

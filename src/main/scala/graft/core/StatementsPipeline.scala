@@ -20,8 +20,8 @@ import graft.spec.Specs
   * `mru` and `missing_stmts` together are one append of the seen rows to
   * the query-text dimension's log, stamped `now()`; the log's fold
   * ([[StatementsDatasource.dimLog]]) keeps, per key, the `min(query)` of
-  * its first tick and the `last_present_ts` of its last. The capture
-  * frame is cached — three outputs from one scan (SURVEY.md §7.4 item 6).
+  * its first tick and the `last_present_ts` of its last. The three
+  * outputs are written by one Spark job (SURVEY.md §7.4 item 6).
   */
 object StatementsPipeline {
 
@@ -32,8 +32,9 @@ object StatementsPipeline {
     * captured row, a plain projection, no shuffle) and the two record
     * sinks. The caller lands all of them atomically with
     * `Store.snapshotCommit` (appends + staging drain under one commit
-    * point). `capture` should be cached by the caller — every returned
-    * frame reads it. */
+    * point). Every returned frame reads `capture`, so it must read the
+    * same rows each time (the engine's staged frame reads a file list
+    * fixed when it was built, `Store.readStaged`). */
   def snapshot(
       capture: DataFrame,
       srvid: Int,

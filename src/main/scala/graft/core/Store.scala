@@ -2,10 +2,14 @@ package graft.core
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import graft.sources.v2.{StoreCommitMessage, StoreDataWriter}
 
 /** Parquet-backed tier storage. Layout (SURVEY.md §7.1):
   *
@@ -276,6 +280,40 @@ final class Store(val spark: SparkSession, val root: String) {
     else AtomicSwap.manifestFiles(dir(ds, tier), s"srvid=$srvid") match {
       case Some(files) => fromManifestFiles(files, srvid, schema)
       case None => readPartitionDir(ds, tier, srvid, schema)
+    }
+
+  /** The rows of `srvids` in a directory-layout tier (staging, which
+    * collectors [[append]] to, one directory per server), pinned to the
+    * files listed once, here: every frame derived from the result reads
+    * exactly these files, so the sinks of one tick see one set of staged
+    * rows however many times they scan it, while a collector keeps
+    * appending. One server's frame is built as a manifest read's is;
+    * with several, `srvid` comes from each file's partition directory.
+    * Columns follow `schema`, srvid first. */
+  def readStaged(ds: String, tier: String, srvids: Seq[Int],
+      schema: StructType): DataFrame =
+    srvids.map(id => id -> listParquet(partDir(ds, tier, id)))
+      .filter(_._2.nonEmpty) match {
+      case Seq() => fromManifestFiles(Nil, srvids.headOption.getOrElse(0), schema)
+      case Seq((id, files)) => fromManifestFiles(files, id, schema)
+      case listed =>
+        val names = "srvid" +: schema.fieldNames.filterNot(_ == "srvid").toSeq
+        spark.read.option("basePath", dir(ds, tier).toString)
+          .schema(StructType(names.map(schema(_))))
+          .parquet(listed.flatMap(_._2).map(_.toString): _*)
+          .select(names.map(col): _*)
+    }
+
+  /** The parquet data files directly in `p`; none when it is absent. */
+  private def listParquet(p: Path): Seq[Path] =
+    if (!Files.isDirectory(p)) Nil
+    else {
+      val s = Files.list(p)
+      try s.iterator().asScala.filter { f =>
+        val n = f.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }.toList
+      finally s.close()
     }
 
   /** Does this server have any data in the tier? A pure directory probe
@@ -757,7 +795,11 @@ final class Store(val spark: SparkSession, val root: String) {
   // discipline as the aggregate commit protocol:
   //
   //   1. write every sink's batch into a dot-prefixed STAGE directory
-  //      inside its tier (invisible to every read path);
+  //      inside its tier (invisible to every read path): ONE Spark job
+  //      for all of a datasource's sinks, whose tasks write parquet
+  //      straight into the stage dirs and report the files they wrote;
+  //      any other file found there afterwards is deleted, so only
+  //      files a successful task attempt reported can promote;
   //   2. create the COMMIT marker directory — one atomic
   //      createDirectory is the commit point;
   //   3. drop the staging partition (the inputs are now represented by
@@ -778,8 +820,10 @@ final class Store(val spark: SparkSession, val root: String) {
   // transaction (MRU update and quals insert included,
   // powa--5.2.0.sql:4025-4044, :7126-7143) does.
 
+  private def snapStagePrefix(ds: String, tier: String): String =
+    dir(ds, tier).resolve(".snapstage_srvid=").toString
   private def snapStageDir(ds: String, tier: String, srvid: Int): Path =
-    dir(ds, tier).resolve(s".snapstage_srvid=$srvid")
+    Paths.get(snapStagePrefix(ds, tier) + srvid)
   private def snapMarker(ds: String, srvid: Int): Path =
     Paths.get(root, ds, s".snapcommit_srvid=$srvid")
 
@@ -787,27 +831,84 @@ final class Store(val spark: SparkSession, val root: String) {
     * partition — the tick's second transaction boundary. Each (tier,
     * df) in `sinks` is appended to that tier's `srvid` partition (a
     * dimension log's batch is one of them); either ALL of them land and
-    * staging drains, or none do. The caller holds the server's snapshot
-    * lock.
+    * staging drains, or none do. Every sink frame carries `srvid`, and
+    * all of its rows belong to this server. The caller holds the
+    * server's snapshot lock.
     *
-    * The sink writes run CONCURRENTLY on [[Parallel.map]], width 4,
-    * each entering [[tickCodegenScope]] on its own pool thread: every
-    * write reads the caller-cached staging frame and writes a distinct
-    * invisible stage directory, and the commit marker is created only
-    * after all of them return, so a failure anywhere rolls the tick
-    * back exactly as the sequential form did (stage dirs are swept by
-    * the next recoverSnapshot). */
+    * The sinks are planned on the calling thread and written by one
+    * Spark job ([[writeStages]]), all inside [[tickCodegenScope]]; the
+    * commit marker is created only after the job returns, so a failure
+    * anywhere rolls the tick back (stage dirs are swept by the next
+    * recoverSnapshot). */
   def snapshotCommit(ds: String, stagingTier: String, srvid: Int,
       sinks: Seq[(String, DataFrame)]): Unit = {
     recoverSnapshot(ds, stagingTier, srvid) // resolve any stale run
-    Parallel.map(sinks, 4) { case (tier, df) =>
-      labeled(s"store: snapshot $ds->$tier srvid=$srvid") {
-        tickCodegenScope {
-          df.drop("srvid").write.mode("overwrite")
-            .parquet(snapStageDir(ds, tier, srvid).toString)
-        }
+    labeled(s"store: snapshot $ds srvid=$srvid") {
+      tickCodegenScope(writeStages(ds, Seq(srvid), sinks))
+    }
+    commitStaged(ds, stagingTier, srvid)
+  }
+
+  /** Step 1 for every server in `srvids`: one Spark job over the union
+    * of the sinks' physical RDDs, one task per sink partition, each
+    * task writing its rows with [[StoreDataWriter]] into
+    * `<tier>/.snapstage_srvid=N/` — one file per (task, server), no
+    * output committer, no `_SUCCESS`. A task returns the files it wrote,
+    * and the job's results hold those of successful attempts only;
+    * afterwards every other file in the stage dirs (a failed or
+    * duplicate attempt's, or any stray) is deleted, the rule of
+    * `StoreBatchWrite.commit`. An attempt still running when the job
+    * returns is not fenced off: this assumes Spark's default of no
+    * speculative execution.
+    *
+    * Each sink's RDD is `executedPlan.execute()`, not
+    * `QueryExecution.toRdd`: `toRdd` wraps it in `SQLExecutionRDD`, whose
+    * tasks re-install the session's SQL conf, which never holds the
+    * scope's `factoryMode`, and would generate code. The job runs under
+    * `SQLExecution.withSQLConfPropagated`, so its tasks read the
+    * session's own SQL settings as an SQL execution's do, plus the
+    * thread's local properties. */
+  private def writeStages(ds: String, srvids: Seq[Int],
+      sinks: Seq[(String, DataFrame)]): Unit = {
+    val sqlKv = StoreDataWriter.sqlConf(spark.sessionState.conf)
+    val ids = srvids.toSet
+    // several servers: each task writes its rows sorted by srvid, one
+    // file open at a time, as the V1 partitioned write does
+    val sorted = srvids.size > 1
+    val writes = sinks.map { case (tier, df) =>
+      val sink = Store.StageSink(tier, snapStagePrefix(ds, tier), df.schema,
+        df.schema.fieldIndex("srvid"), ids, sqlKv, sorted)
+      val plan = if (sorted) df.sortWithinPartitions("srvid") else df
+      // planned afresh here, inside the caller's scope, as a write would
+      spark.sessionState.executePlan(plan.queryExecution.analyzed)
+        .executedPlan.execute()
+        .mapPartitions(rows => Iterator(Store.writeStage(sink, rows)))
+    }
+    val reported = SQLExecution.withSQLConfPropagated(
+        org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)) {
+      spark.sparkContext.union(writes).collect()
+    }.flatten.groupMap(f => (f._1, f._2))(f => Paths.get(f._3).getFileName.toString)
+    for (tier <- sinks.map(_._1).distinct; id <- srvids) {
+      val d = snapStageDir(ds, tier, id)
+      if (Files.isDirectory(d)) {
+        val keep = reported.getOrElse((tier, id), Array.empty[String]).toSet
+        val s = Files.list(d)
+        val other =
+          try s.iterator().asScala.filterNot { f =>
+            val n = f.getFileName.toString
+            keep(n) || keep(n.stripPrefix(".").stripSuffix(".crc"))
+          }.toList
+          finally s.close()
+        if (keep.isEmpty) deleteRecursively(d)
+        else other.foreach(deleteRecursively)
       }
     }
+  }
+
+  /** Steps 2-5 for one server whose stage dirs are written: marker,
+    * staging drain, promotion, unmark. */
+  private def commitStaged(ds: String, stagingTier: String,
+      srvid: Int): Unit = {
     Files.createDirectory(snapMarker(ds, srvid)) // commit point
     dropPartition(ds, stagingTier, srvid)
     promoteSnapshot(ds, srvid)
@@ -860,52 +961,38 @@ final class Store(val spark: SparkSession, val root: String) {
 
   // ---- fleet snapshot commit ----------------------------------------
   //
-  // The per-(server, datasource) snapshotCommit launches one Spark write
-  // per sink tier PER SERVER: at 10k active servers × 23 datasources a
-  // fully-staged tick is ~230k driver-scheduled jobs — a driver-side
-  // scheduling bottleneck, not a data one (guide §2/§5: the work per job
-  // is tiny; the cost is the job itself). The fleet form lands EVERY
-  // staged server's batch for a tier with ONE partitionBy("srvid") write
-  // into a dot-prefixed temp dir, then runs the UNCHANGED per-server
-  // commit protocol over pure filesystem ops: move each srvid's staged
-  // batch to its .snapstage dir, then per server marker → drain →
-  // promote → unmark. Crash semantics are exactly the per-server
-  // protocol's: a crash before a server's marker rolls that server back
-  // (stage dirs swept, staging intact, retry re-derives), a crash after
-  // rolls it forward — servers are independent, some may land and some
-  // roll back, which is precisely what N sequential commits interrupted
-  // at the same instant would leave. A crash during the fleet write
-  // itself leaves only `.snapfleet_*` temp dirs: invisible to every
-  // reader (dot-prefixed) and swept by [[cleanFleetStages]] at the next
-  // fleet commit or engine recovery.
-
-  private def fleetTmpDir(ds: String, tier: String): Path =
-    dir(ds, tier).resolve(
-      s".snapfleet_${java.util.UUID.randomUUID.toString.take(8)}")
+  // The per-(server, datasource) snapshotCommit launches one Spark job
+  // PER SERVER: at 10k active servers × 23 datasources a fully-staged
+  // tick is ~230k driver-scheduled jobs — a driver-side scheduling
+  // bottleneck, not a data one (guide §2/§5: the work per job is tiny;
+  // the cost is the job itself). The fleet form writes EVERY staged
+  // server's batches with the same one job per datasource
+  // ([[writeStages]]): its tasks sort their rows by srvid and write
+  // them straight into each server's stage dirs, one file open at a
+  // time (an open parquet writer per server a task meets took 3-5x the
+  // heap at 1000 servers, SCALE.md). Then the UNCHANGED per-server commit protocol
+  // runs over pure filesystem ops: per server marker → drain → promote →
+  // unmark. Crash semantics are exactly the per-server protocol's: a
+  // crash before a server's marker rolls that server back (stage dirs
+  // swept, staging intact, retry re-derives), a crash after rolls it
+  // forward — servers are independent, some may land and some roll
+  // back, which is precisely what N sequential commits interrupted at
+  // the same instant would leave.
 
   /** Fleet variant of [[snapshotCommit]]: land MANY servers' sink
-    * batches with one Spark write per sink tier, then the per-server
-    * commit protocol (filesystem-only) unchanged. Each `sinks` frame
-    * must carry `srvid` (the write partitions on it); every server in
-    * `srvids` is committed independently — marker, staging drain,
-    * promote — so crash recovery per server is identical to the
-    * sequential path's. Callers hold every listed server's snapshot
-    * lock. */
+    * batches with one Spark job, then the per-server commit protocol
+    * (filesystem-only) unchanged. Each `sinks` frame carries `srvid`;
+    * every server in `srvids` is committed independently — marker,
+    * staging drain, promote — so crash recovery per server is identical
+    * to the sequential path's. The write keeps code generation: its
+    * size grows with the fleet. Callers hold every listed server's
+    * snapshot lock. */
   def snapshotCommitFleet(ds: String, stagingTier: String,
       srvids: Seq[Int], sinks: Seq[(String, DataFrame)]): Unit = {
     if (srvids.isEmpty) return
-    cleanFleetStages(ds) // sweep any crashed fleet write's temp dirs
     srvids.foreach(recoverSnapshot(ds, stagingTier, _))
-    sinks.foreach { case (tier, df) =>
-      val tmp = fleetTmpDir(ds, tier)
-      df.write.mode("overwrite").partitionBy("srvid")
-        .parquet(tmp.toString)
-      srvids.foreach { id =>
-        val src = tmp.resolve(s"srvid=$id")
-        if (Files.isDirectory(src))
-          Files.move(src, snapStageDir(ds, tier, id))
-      }
-      deleteRecursively(tmp)
+    labeled(s"store: snapshot $ds servers=${srvids.size}") {
+      writeStages(ds, srvids, sinks)
     }
     // The per-server commit protocol, UNCHANGED in shape, on
     // Parallel.map: each server's marker → drain → promote → unmark
@@ -919,16 +1006,14 @@ final class Store(val spark: SparkSession, val root: String) {
     // recoverSnapshot rolls back, as after a crash mid-loop.
     Parallel.map(srvids,
         math.min(32, Runtime.getRuntime.availableProcessors())) { id =>
-      Files.createDirectory(snapMarker(ds, id)) // commit point
-      dropPartition(ds, stagingTier, id)
-      promoteSnapshot(ds, id)
-      Files.deleteIfExists(snapMarker(ds, id))
+      commitStaged(ds, stagingTier, id)
     }
   }
 
-  /** Sweep `.snapfleet_*` temp dirs a crashed fleet write left behind —
-    * dot-prefixed (invisible to all readers), so this is pure hygiene:
-    * called at every fleet commit start and from engine recovery. */
+  /** Sweep `.snapfleet_*` temp dirs that the fleet write of older
+    * builds (a `partitionBy("srvid")` write into a temp dir, then moves)
+    * left behind when it crashed — dot-prefixed (invisible to all
+    * readers), so this is pure hygiene, called from engine recovery. */
   def cleanFleetStages(ds: String): Unit = {
     val base = Paths.get(root, ds)
     if (!Files.isDirectory(base)) return
@@ -987,4 +1072,28 @@ final class Store(val spark: SparkSession, val root: String) {
 
   private def deleteRecursively(p: Path): Unit =
     AtomicSwap.deleteRecursively(p)
+}
+
+object Store {
+  /** One sink of a tick's write job, as its tasks see it: the stage
+    * directory of server N is `dirPrefix + N`. */
+  private final case class StageSink(tier: String, dirPrefix: String,
+      schema: StructType, srvidIdx: Int, srvids: Set[Int],
+      sqlKv: Seq[(String, String)], sortedBySrvid: Boolean)
+
+  /** The task side of [[Store.writeStages]]: write one partition of a
+    * sink and return (tier, srvid, path) of each file written; a failed
+    * task deletes its files. */
+  private def writeStage(sink: StageSink,
+      rows: Iterator[InternalRow]): Seq[(String, Int, String)] = {
+    val ctx = TaskContext.get()
+    val w = new StoreDataWriter(sink.dirPrefix, sink.schema, sink.srvidIdx,
+      ctx.partitionId(), ctx.taskAttemptId(), sink.sqlKv, Some(sink.srvids),
+      sink.sortedBySrvid)
+    try {
+      rows.foreach(w.write)
+      w.commit().asInstanceOf[StoreCommitMessage].files
+        .map { case (id, path) => (sink.tier, id, path) }
+    } catch { case t: Throwable => w.abort(); throw t }
+  }
 }

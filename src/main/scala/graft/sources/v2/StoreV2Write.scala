@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.BasicWriteTaskStatsTracker
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.core.AtomicSwap
@@ -90,28 +92,8 @@ final class StoreBatchWrite(layout: StoreLayout, schema: StructType,
     require(schema(srvidIdx).dataType == IntegerType,
       s"graft-store write: srvid must be int, got ${schema(srvidIdx).dataType}")
     Files.createDirectories(stagingRoot)
-    // Same capture as the read side (StoreScan.createReaderFactory):
-    // ParquetWriteSupport.init hard-reads these from the task-side conf
-    // and the executor has no SparkSession to resolve defaults from.
-    val sq = SparkSession.active.sessionState.conf
-    // drop entries whose stringified value is "null" (e.g. optional
-    // confs with no default): Configuration.set would store the literal
-    // string and the schema converter's .toBoolean chokes on it
-    val defined = sq.getAllDefinedConfs
-      .collect { case (k, v, _, _)
-          if v != null && v != "<undefined>" && v != "null" =>
-        k -> v }
-    import org.apache.spark.sql.internal.SQLConf
-    val hardRead = Seq(
-      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
-      SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
-      SQLConf.PARQUET_REBASE_MODE_IN_WRITE,
-      SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE,
-      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
-      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE
-    ).map(e => e.key -> sq.getConf(e).toString)
-    StoreWriterFactory(stagingRoot.toString, schema, srvidIdx,
-      defined ++ hardRead)
+    StoreWriterFactory(stagingRoot.resolve("srvid=").toString, schema,
+      srvidIdx, StoreDataWriter.sqlConf(SparkSession.active.sessionState.conf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -169,35 +151,58 @@ final class StoreBatchWrite(layout: StoreLayout, schema: StructType,
 final case class StoreCommitMessage(files: Seq[(Int, String)])
     extends WriterCommitMessage
 
-final case class StoreWriterFactory(stagingRoot: String, schema: StructType,
+final case class StoreWriterFactory(dirPrefix: String, schema: StructType,
     srvidIdx: Int, sqlKv: Seq[(String, String)]) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new StoreDataWriter(stagingRoot, schema, srvidIdx, partitionId, taskId,
+    new StoreDataWriter(dirPrefix, schema, srvidIdx, partitionId, taskId,
       sqlKv)
 }
 
 /** Executor-side demux writer: one Spark-native parquet writer per
-  * srvid encountered in this task's rows. File names carry (partition,
-  * task) ids, so speculative attempts never collide and only the
-  * committed attempt's files are named in the commit message. */
-final class StoreDataWriter(stagingRoot: String, schema: StructType,
+  * srvid encountered in this task's rows, in directory `dirPrefix + srvid`
+  * (a write's `.w_<queryId>/srvid=N`, a snapshot's `.snapstage_srvid=N`).
+  * File names carry (partition, task) ids, so speculative attempts never
+  * collide and only the committed attempt's files are named in the
+  * commit message. `srvids`, when given, is the set of servers the write
+  * may touch: a row of any other server fails the task before a file of
+  * that server is opened. With `sortedBySrvid`, the rows arrive sorted
+  * by srvid and each server's file is closed when the next server's
+  * first row arrives, so one writer is open at a time, as in the V1
+  * writer's sort-based path; a server whose rows come back after that
+  * fails the task. Bytes and rows written are reported to the task's
+  * output metrics through Spark's `BasicWriteTaskStatsTracker`, as
+  * `FileFormatWriter` does. */
+final class StoreDataWriter(dirPrefix: String, schema: StructType,
     srvidIdx: Int, partitionId: Int, taskId: Long,
-    sqlKv: Seq[(String, String)]) extends DataWriter[InternalRow] {
+    sqlKv: Seq[(String, String)], srvids: Option[Set[Int]] = None,
+    sortedBySrvid: Boolean = false)
+    extends DataWriter[InternalRow] {
 
   private val dataFields =
     schema.fields.zipWithIndex.filter(_._2 != srvidIdx)
   // project the srvid column away: field ordinals are stable, so a
-  // bound-reference projection is all that's needed (codegen'd, no
-  // session required on the executor)
+  // bound-reference projection is all that's needed (no session required
+  // on the executor; interpreted when the job's local properties carry
+  // factoryMode=NO_CODEGEN)
   private val proj = UnsafeProjection.create(
     dataFields.map { case (f, i) =>
       BoundReference(i, f.dataType, f.nullable) }.toSeq)
   private val writers = mutable.Map.empty[Int, ParquetOutputWriter]
   private val paths = mutable.ListBuffer.empty[(Int, String)]
+  private val stats =
+    new BasicWriteTaskStatsTracker(StoreReaderFactory.baseConf, None)
 
   private def open(srvid: Int): ParquetOutputWriter = {
-    val dir = Paths.get(stagingRoot, s"srvid=$srvid")
+    srvids.foreach(ids => require(ids(srvid),
+      s"graft-store write: a row of server $srvid in a write of servers " +
+        ids.toSeq.sorted.mkString(", ")))
+    if (sortedBySrvid) {
+      require(!paths.exists(_._1 == srvid),
+        s"graft-store write: rows of server $srvid are not contiguous")
+      closeAll()
+    }
+    val dir = Paths.get(dirPrefix + srvid)
     Files.createDirectories(dir)
     val path = dir.resolve(
       f"part-$partitionId%05d-$taskId.parquet").toString
@@ -215,7 +220,9 @@ final class StoreDataWriter(stagingRoot: String, schema: StructType,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, partitionId),
         taskId.toInt))
     paths += srvid -> path
-    new ParquetOutputWriter(path, ctx)
+    val w = new ParquetOutputWriter(path, ctx)
+    stats.newFile(path)
+    w
   }
 
   override def write(row: InternalRow): Unit = {
@@ -223,11 +230,20 @@ final class StoreDataWriter(stagingRoot: String, schema: StructType,
       throw new IllegalArgumentException(
         "graft-store write: NULL srvid — every row must belong to a server")
     val srvid = row.getInt(srvidIdx)
-    writers.getOrElseUpdate(srvid, open(srvid)).write(proj(row))
+    val w = writers.getOrElseUpdate(srvid, open(srvid))
+    val out = proj(row)
+    w.write(out)
+    stats.newRow(w.path, out)
+  }
+
+  private def closeAll(): Unit = {
+    writers.values.foreach { w => w.close(); stats.closeFile(w.path) }
+    writers.clear()
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.close())
+    closeAll()
+    stats.getFinalStats(0L)
     StoreCommitMessage(paths.toList)
   }
 
@@ -240,4 +256,24 @@ final class StoreDataWriter(stagingRoot: String, schema: StructType,
   }
 
   override def close(): Unit = ()
+}
+
+object StoreDataWriter {
+  /** The SQL settings a task-side parquet writer reads, captured on the
+    * driver from `sq` (the session's conf, which the V1 parquet write
+    * reads too): the settings the session holds, as the V1 write's Hadoop
+    * conf carries them, plus the ones `ParquetWriteSupport.init` and its
+    * schema converter hard-read from the task-side Hadoop conf, which
+    * the executor has no SparkSession to resolve defaults for. */
+  def sqlConf(sq: SQLConf): Seq[(String, String)] = {
+    val hardRead = Seq(
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+      SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+      SQLConf.PARQUET_REBASE_MODE_IN_WRITE,
+      SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE
+    ).map(e => e.key -> sq.getConf(e).toString)
+    sq.getAllConfs.toSeq ++ hardRead
+  }
 }

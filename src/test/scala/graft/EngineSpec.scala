@@ -2153,12 +2153,32 @@ class EngineSpec extends AnyFunSuite {
     try body finally spark.experimental.extraOptimizations = Nil
   }
 
-  /** The statements dimension log's stage directory has a completed
-    * write: its sink ran, and the commit marker has not promoted it. */
-  private def dimSinkWritten(e: Engine, srvid: Int): () => Boolean = () =>
-    java.nio.file.Files.exists(java.nio.file.Paths.get(e.store.root,
-      "powa_statements", GenericDatasource.Dim, s".snapstage_srvid=$srvid",
-      "_SUCCESS"))
+  /** Run `body` (a tick) with a regular file planted at the statements
+    * commit marker's path, so that datasource's commit fails after its
+    * write job and before its marker; the dimension log's batch must
+    * have been written. The file is removed after. */
+  private def failingCommit[T](e: Engine, srvid: Int)(body: => T): T = {
+    val marker = java.nio.file.Paths.get(e.store.root, "powa_statements",
+      s".snapcommit_srvid=$srvid")
+    java.nio.file.Files.writeString(marker, "injected")
+    try {
+      val r = body
+      assert(dimSinkWritten(e, srvid)(), "the dimension sink had been written")
+      r
+    } finally java.nio.file.Files.delete(marker)
+  }
+
+  /** The statements dimension log's stage directory holds a parquet
+    * file: its sink ran, and the commit marker has not promoted it. */
+  private def dimSinkWritten(e: Engine, srvid: Int): () => Boolean = () => {
+    val stage = java.nio.file.Paths.get(e.store.root, "powa_statements",
+      GenericDatasource.Dim, s".snapstage_srvid=$srvid")
+    java.nio.file.Files.isDirectory(stage) && {
+      val s = java.nio.file.Files.list(stage)
+      try s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
+      finally s.close()
+    }
+  }
 
   test("steady-state ticks over statements and qualstats launch no " +
       "dimension overwrite and no probe job") {
@@ -2189,8 +2209,9 @@ class EngineSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
     val all = labels.asScala.toSeq
     Seq("powa_statements", "powa_qualstats").foreach { ds =>
-      assert(all.count(_.startsWith(s"store: snapshot $ds->dim ")) === 3,
-        s"$ds: one dimension log append per tick")
+      assert(all.count(_.startsWith(s"store: snapshot $ds ")) === 3,
+        s"$ds: one snapshot job, the dimension log append among its " +
+          "sinks, per tick")
       assert(!all.exists(_.startsWith(s"store: overwrite $ds/dim")), all)
     }
     assert(!all.exists(_.startsWith("store: probe")), all)
@@ -2200,6 +2221,141 @@ class EngineSpec extends AnyFunSuite {
       === Set(1L, 2L).map(_ -> Timestamp.valueOf("2024-01-01 00:04:30")))
     val qd = e.datasource("powa_qualstats").asInstanceOf[QualstatsDatasource]
     assert(qd.readDim(e.store, srvid).count() === 2)
+  }
+
+  test("a steady-state plain tick launches exactly one Spark job per " +
+      "staged datasource") {
+    val e = mkEngine()
+    // phase (seq + 10) % 100 stays plain for every tick below
+    val srvid = e.registry.registerServer(ServerConfig(id = 310,
+      hostname = "h", powaCoalesce = 100, retentionSec = 86400))
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        labels.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    val staged = Seq("powa_statements", "powa_qualstats", "powa_stat_bgwriter")
+    def tick(k: Int): Unit = {
+      val ts = Timestamp.valueOf(f"2024-01-01 00:0$k:00")
+      e.ingest("powa_statements", statementsAt(srvid, ts,
+        Seq(1L -> "SELECT 1", 2L -> "SELECT 2")))
+      e.ingest("powa_qualstats", qualstatsAt(srvid, ts, Seq(7L -> 200L, 8L -> 201L)))
+      e.ingest("powa_stat_bgwriter", bgwriterAt(srvid, ts, k.toLong))
+      assert(e.takeSnapshot(srvid, new Timestamp(ts.getTime + 30000L)) === 0)
+    }
+    tick(1)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (2 to 4).foreach(tick)
+      Thread.sleep(1500) // listener bus delivery is async
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the ingests before each tick are the only other jobs
+    val tickJobs = labels.asScala.toSeq.filterNot(_.startsWith("store: append "))
+    assert(tickJobs.size === 3 * staged.size, tickJobs)
+    staged.foreach { ds =>
+      assert(tickJobs.count(_.startsWith(s"store: snapshot $ds ")) === 3,
+        s"$ds: one job per tick: $tickJobs")
+    }
+    assert(tierCount(e, "powa_stat_bgwriter", GenericDatasource.Current) === 4)
+  }
+
+  test("a snapshot commit promotes only the files its tasks reported") {
+    val root = java.nio.file.Files.createTempDirectory("graft_stray").toString
+    val store = new Store(spark, root)
+    val (ds, srvid) = ("stray", 1)
+    val stage = java.nio.file.Paths.get(root, ds, "current",
+      s".snapstage_srvid=$srvid")
+    // evaluated in the write's task: a file the task does not report
+    val stageDir = stage.toString
+    val plant = udf { (v: Long) =>
+      val d = java.nio.file.Paths.get(stageDir)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.writeString(d.resolve("stray.parquet"), "junk")
+      v
+    }
+    val batch = spark.range(0, 5, 1, 1).toDF("v").withColumn("srvid", lit(srvid))
+    store.append(ds, "staging", batch)
+    store.snapshotCommit(ds, "staging", srvid,
+      Seq("current" -> batch.select(plant(col("v")).as("v"), col("srvid"))))
+    val live = AtomicSwap.liveTarget(
+      java.nio.file.Paths.get(root, ds, "current"), s"srvid=$srvid").get
+    val files = {
+      val s = java.nio.file.Files.walk(live)
+      try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally s.close()
+    }
+    assert(files.map(_.getFileName.toString) match {
+      case Seq(f) => f.startsWith("part-")
+      case _ => false
+    }, s"one reported file, no stray: $files")
+    assert(!java.nio.file.Files.exists(stage))
+    assert(store.read(ds, "current", batch.schema).collect()
+      .map(_.getAs[Long]("v")).sorted.toSeq === (0L until 5L))
+    assert(!store.hasPartition(ds, "staging", srvid))
+  }
+
+  test("a snapshot commit whose write task fails promotes nothing; the " +
+      "retry commits once") {
+    val root = java.nio.file.Files.createTempDirectory("graft_taskfail").toString
+    val store = new Store(spark, root)
+    val (ds, srvid) = ("taskfail", 1)
+    def stage(tier: String) = java.nio.file.Paths.get(root, ds, tier,
+      s".snapstage_srvid=$srvid")
+    // a closed parquet file in `d`; a function value, as the UDF uses it
+    val complete: java.nio.file.Path => Boolean = d =>
+      java.nio.file.Files.isDirectory(d) && {
+        val s = java.nio.file.Files.list(d)
+        try s.iterator().asScala.exists { f =>
+          val n = f.getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith(".") && {
+            val b = java.nio.file.Files.readAllBytes(f)
+            b.length > 8 && new String(b.takeRight(4), "US-ASCII") == "PAR1"
+          }
+        } finally s.close()
+      }
+    // evaluated in the `other` sink's task while `arm` exists: it fails
+    // once the `current` sink's task, in the same job, closed its file
+    val arm = java.nio.file.Paths.get(root, "arm")
+    val (armPath, currentStage) = (arm.toString, stage("current").toString)
+    val failOnce = udf { (v: Long) =>
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(armPath))) {
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!complete(java.nio.file.Paths.get(currentStage)) &&
+          System.nanoTime() < deadline) Thread.sleep(5)
+        throw new IllegalStateException("injected task failure")
+      }
+      v
+    }
+    val batch = spark.range(0, 5, 1, 1).toDF("v").withColumn("srvid", lit(srvid))
+    store.append(ds, "staging", batch)
+    val sinks = Seq("current" -> batch,
+      "other" -> batch.select(failOnce(col("v")).as("v"), col("srvid")))
+    java.nio.file.Files.createFile(arm)
+    val err = intercept[Exception](store.snapshotCommit(ds, "staging", srvid, sinks))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("injected task failure"))), err)
+    assert(complete(stage("current")), "the sibling task's file is left staged")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, ds, s".snapcommit_srvid=$srvid")), "no marker")
+    assert(store.hasPartition(ds, "staging", srvid), "staging intact")
+    assert(store.readStaged(ds, "staging", Seq(srvid), batch.schema).count() === 5)
+    Seq("current", "other").foreach { tier =>
+      assert(AtomicSwap.liveTarget(java.nio.file.Paths.get(root, ds, tier),
+        s"srvid=$srvid").isEmpty, s"$tier: no row promoted")
+    }
+
+    java.nio.file.Files.delete(arm)
+    store.snapshotCommit(ds, "staging", srvid, sinks)
+    Seq("current", "other").foreach { tier =>
+      assert(store.read(ds, tier, batch.schema).collect()
+        .map(_.getAs[Long]("v")).sorted.toSeq === (0L until 5L), s"$tier: once")
+      assert(!java.nio.file.Files.exists(stage(tier)))
+    }
+    assert(!store.hasPartition(ds, "staging", srvid))
   }
 
   test("a tick that fails after its dimension log sink is written leaves " +
@@ -2218,11 +2374,14 @@ class EngineSpec extends AnyFunSuite {
     val t2 = Timestamp.valueOf("2024-01-01 00:02:00")
     e.ingest("powa_statements", statementsAt(srvid, t2,
       Seq(1L -> "SELECT 1", 2L -> "SELECT 2")))
-    // the current sink fails once the dimension log's batch is written
-    val errs = failingWrite("store: snapshot powa_statements->current ",
-      dimSinkWritten(e, srvid))(e.takeSnapshot(srvid, t2))
+    // the commit fails after the write job, before its marker
+    val errs = failingCommit(e, srvid)(e.takeSnapshot(srvid, t2))
     assert(errs === 1)
-    assert(e.registry.meta(srvid).errors.last.contains("injected"))
+    // the recorded error is the failed marker creation on the planted file
+    val marker = java.nio.file.Paths.get(e.store.root, "powa_statements",
+      s".snapcommit_srvid=$srvid")
+    assert(e.registry.meta(srvid).errors.last ===
+      s"powa_statements_snapshot: $marker")
     assert(dimSinkWritten(e, srvid)(), "the dimension sink had been written")
     assert(dim() === Set((1L, "SELECT 1", t1)), "no dimension row from the failed tick")
     assert(e.store.hasPartition("powa_statements", GenericDatasource.Staging, srvid))
@@ -2323,8 +2482,7 @@ class EngineSpec extends AnyFunSuite {
     // statements marker: its dimension is unchanged; qualstats commits
     val t3 = Timestamp.valueOf("2024-01-01 00:10:00")
     stage(t3, Seq(1L -> "SELECT 1", 4L -> "SELECT 4"), Seq(10L -> 203L))
-    assert(failingWrite("store: snapshot powa_statements->current ",
-      dimSinkWritten(e, srvid))(e.takeSnapshot(srvid, t3)) === 1)
+    assert(failingCommit(e, srvid)(e.takeSnapshot(srvid, t3)) === 1)
     rewrite(Nil, Seq(10L -> 203L), t3)
     check("the crashed tick")
     // 4: the retry drains the same staged rows on the aggregate tick,

@@ -541,4 +541,46 @@ class SwapSpec extends AnyFunSuite {
     assert(e.getMessage.contains("format 3"))
     AtomicSwap.deleteRecursively(Paths.get(root))
   }
+
+  test("manifest republish carries a stats-less file's known absence " +
+      "forward without reopening its footer") {
+    val (store, root) = mkStore()
+    // no stat column: a dimension-log-like batch
+    store.appendPartition("ds", "dim", 1, batch(1, 1L, 5).coalesce(1))
+    val parent = Paths.get(root, "ds", "dim")
+    val live = AtomicSwap.liveTarget(parent, "srvid=1").get
+    val first = Files.walk(live).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toList
+    assert(first.size === 1)
+    val f = first.head
+    // an unreadable footer of the same length and mtime: a republish
+    // that reopened it would find no footer and drop the file's entry
+    val len = Files.size(f)
+    val mtime = Files.getLastModifiedTime(f)
+    val original = Files.readAllBytes(f)
+    Files.write(f, Array.fill[Byte](len.toInt)(7))
+    Files.setLastModifiedTime(f, mtime)
+    store.appendPartition("ds", "dim", 1, batch(1, 2L, 5))
+    def sidecar(rel: String): Option[String] =
+      Files.readString(parent.resolve(".m_srvid=1")).split("\n")
+        .find(l => l.startsWith("\t") && l.split("\t")(1) == rel)
+    val rel = parent.relativize(f).toString
+    assert(sidecar(rel).exists(_.contains("_nostats=")),
+      s"the stats-less file's entry must carry forward: ${sidecar(rel)}")
+    // readers never see the pseudo-entry
+    assert(AtomicSwap.manifestEntries(parent, "srvid=1").get
+      .forall(_._2.isEmpty))
+    // a failed footer read stays unknown: no entry, so the next
+    // republish reads the footer again
+    Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+      .fromMillis(mtime.toMillis + 5000L))
+    AtomicSwap.republish(parent, "srvid=1")
+    assert(sidecar(rel).exists(l => !l.contains("_nostats=")),
+      s"an unreadable footer is not a known absence: ${sidecar(rel)}")
+    Files.write(f, original)
+    AtomicSwap.republish(parent, "srvid=1")
+    assert(sidecar(rel).exists(_.contains("_nostats=")))
+    assert(store.readPartition("ds", "dim", 1, schema).count() === 10)
+    AtomicSwap.deleteRecursively(Paths.get(root))
+  }
 }
